@@ -174,18 +174,3 @@ def service_catalog_df(spark: SparkSession) -> DataFrame:
         service_catalog_rows(),
         schema="tool string, role string, service string, category string, default_severity string",
     )
-
-
-def write_transcripts(
-    spark: SparkSession, path: str, n_rows: int, seed: int = 42, **kw
-) -> None:
-    """Materialize the synthetic table as partitioned parquet (dt partition
-    mirrors the reference's yyyy/MM/dd/HH object layout,
-    /root/reference/destination/gcs/client.go:42-54)."""
-    df = transcripts_df(spark, n_rows, seed=seed, **kw)
-    (
-        df.withColumn("dt", F.to_date("ts"))
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(path)
-    )

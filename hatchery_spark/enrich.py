@@ -6,107 +6,32 @@ and the per-source call sites, e.g. /root/reference/source/slack/slack.go:174-17
 generalized to a relational lookup: (tool, role) → (service, category,
 default_severity).
 
-The catalog is tiny (≤ a few hundred rows) so we FORCE a broadcast hash join:
-no shuffle of the 10^12-row fact side, the dimension ships to every executor once.
-Left join keeps catalog-miss rows (unknown tools) flowing, with 'unknown'
-fallbacks — the reference's unknown-schema-hint behavior
+One path: the catalog is tiny (≤ a few hundred rows) so we FORCE a broadcast
+hash join: no shuffle of the 10^12-row fact side, the dimension ships to every
+executor once, and building the plan runs no driver-side job. Left join keeps
+catalog-miss rows (unknown tools) flowing, with 'unknown' fallbacks — the
+reference's unknown-schema-hint behavior
 (/root/reference/source/falcon_data_replicator/client.go:195-198).
 """
 
 from __future__ import annotations
-
-from itertools import chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ENRICH_KEYS = ("tool", "role")
 
-#: compile the catalog into the plan when it has at most this many rows;
-#: larger catalogs keep the broadcast hash join
-MAP_COMPILE_LIMIT = 1000
-
-_CATALOG_COLS = {"tool", "role", "service", "category", "default_severity"}
-
-
-def _compile_catalog(catalog: DataFrame):
-    """Try to compile the catalog to a nested literal map
-    tool → (role → struct(service, category, default_severity)).
-
-    Returns the map Column, or None when the catalog is too big, has
-    unexpected columns, NULL keys, or duplicate (tool, role) keys — the
-    cases where only the join reproduces left-join semantics exactly."""
-    if set(catalog.columns) != _CATALOG_COLS:
-        return None
-    rows = catalog.limit(MAP_COMPILE_LIMIT + 1).collect()
-    if len(rows) > MAP_COMPILE_LIMIT:
-        return None
-    by_tool: dict[str, dict[str, tuple]] = {}
-    for r in rows:
-        if r["tool"] is None or r["role"] is None:
-            return None
-        roles = by_tool.setdefault(r["tool"], {})
-        if r["role"] in roles:  # dup key: join would fan out — not a map
-            return None
-        roles[r["role"]] = (r["service"], r["category"], r["default_severity"])
-    return F.create_map(
-        *chain.from_iterable(
-            (
-                F.lit(tool),
-                F.create_map(
-                    *chain.from_iterable(
-                        (
-                            F.lit(role),
-                            F.struct(
-                                F.lit(svc).alias("service"),
-                                F.lit(cat).alias("category"),
-                                F.lit(sev).alias("default_severity"),
-                            ),
-                        )
-                        for role, (svc, cat, sev) in roles.items()
-                    )
-                ),
-            )
-            for tool, roles in by_tool.items()
-        )
-    )
-
 
 def enrich_turns(parsed: DataFrame, catalog: DataFrame) -> DataFrame:
-    """Enrich parsed turns with the service catalog.
+    """Enrich parsed turns with the service catalog by a forced broadcast
+    left join on (tool, role).
 
     Adds: service, category (both 'unknown' on miss) and resolves severity as
-    coalesce(parsed severity, catalog default_severity, 'unknown').
-
-    A small catalog (≤ MAP_COMPILE_LIMIT rows — the normal case; the contract
-    says "a few hundred") is compiled into a plan-literal nested map, so the
-    lookup runs inside the fact side's own codegen stage: no broadcast build,
-    no exchange, no join operator — the probe was the one pipeline stage
-    measurably below the hardware scaling ceiling, and a 12M-row agg run
-    measured ~1.6× faster end-to-end with the compiled form. Oversized or
-    irregular catalogs (dup/NULL keys, extra columns) fall back to the
-    forced broadcast hash join with identical semantics."""
-    compiled = _compile_catalog(catalog)
-    if compiled is not None:
-        hit = compiled[F.col("tool")][F.col("role")]
-        rest = [c for c in parsed.columns if c not in ENRICH_KEYS]
-        # same output column ORDER as the join form: keys first, then the
-        # remaining parsed columns, then the catalog-derived columns
-        return parsed.select(
-            *ENRICH_KEYS,
-            *[
-                F.coalesce(
-                    F.col("severity"),
-                    hit["default_severity"],
-                    F.lit("unknown"),
-                ).alias("severity")
-                if c == "severity"
-                else F.col(c)
-                for c in rest
-            ],
-            F.coalesce(hit["service"], F.lit("unknown")).alias("service"),
-            F.coalesce(hit["category"], F.lit("unknown")).alias("category"),
-        )
+    coalesce(parsed severity, catalog default_severity, 'unknown'). Plain
+    left-join semantics hold for any catalog: a NULL key never matches, and a
+    duplicated (tool, role) key yields one output row per catalog match.
+    Lazy: the catalog is read by the query that uses the result, never
+    collected to the driver here."""
     joined = parsed.join(F.broadcast(catalog), on=list(ENRICH_KEYS), how="left")
     return joined.withColumns(
         {

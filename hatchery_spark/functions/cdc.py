@@ -81,15 +81,21 @@ def cdc_chunk_documents(
     )
     staged2 = staged.select(id_col, "t", starts.alias("_st"))
     st = F.col("_st")
-    chunks = F.transform(
-        F.sequence(F.lit(0), F.size(st) - 1),
-        lambda j: F.struct(
-            j.cast("int").alias("chunk_idx"),
-            F.element_at(st, j + 1).cast("int").alias("start"),
-            (
-                F.coalesce(F.try_element_at(st, j + 2), n + 1)
-                - F.element_at(st, j + 1)
-            ).cast("int").alias("chunk_len"),
+    # an empty document has no chunk starts: sequence(0, -1) would count
+    # DOWN to -1 and element_at(st, 1) fail the whole query, so it yields
+    # NULL instead and inline emits no rows (as for a NULL document)
+    chunks = F.when(
+        F.size(st) > 0,
+        F.transform(
+            F.sequence(F.lit(0), F.size(st) - 1),
+            lambda j: F.struct(
+                j.cast("int").alias("chunk_idx"),
+                F.element_at(st, j + 1).cast("int").alias("start"),
+                (
+                    F.coalesce(F.try_element_at(st, j + 2), n + 1)
+                    - F.element_at(st, j + 1)
+                ).cast("int").alias("chunk_len"),
+            ),
         ),
     )
     out = staged2.select(id_col, "t", F.inline(chunks)).select(

@@ -25,7 +25,7 @@ counted and reported, not silently dropped.
 
 from __future__ import annotations
 
-from functools import partial, reduce
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -146,37 +146,6 @@ def char_shingles(text: Column, k: int = 5) -> Column:
 
 def _seeded_rehash(seed: int, h: Column) -> Column:
     return F.xxhash64(h, F.lit(seed))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """Array of `num_hashes` minhash values.
-
-    Each shingle string is hashed ONCE (xxhash64); the hash family is then
-    `xxhash64(base_hash, seed_i)` over the resulting longs — fixed-width
-    re-hashing, so adding hash functions never re-reads shingle bytes.
-    (No affine `a·h+b` family: ANSI mode makes long overflow throw.)
-
-    The seed is bound with functools.partial, NOT a `lambda h, i=i:` default —
-    PySpark passes the ARRAY INDEX as the second argument of any two-parameter
-    transform lambda, which would silently override the captured seed and
-    collapse the whole family to one function.
-
-    NOTE: higher-order functions are interpreted (CodegenFallback), so there is
-    NO runtime common-subexpression elimination here — inlining `base` into all
-    `num_hashes` mins would re-shingle and re-hash the text once per hash
-    function. Prefer `minhash_signature_staged` (two projections) on any hot
-    path; this single-Column form is kept for expression-level composition.
-    """
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-    return _sig_from_base(base, num_hashes)
-
-
-def _sig_from_base(base: Column, num_hashes: int) -> Column:
-    mins = [
-        F.array_min(F.transform(base, partial(_seeded_rehash, i)))
-        for i in range(num_hashes)
-    ]
-    return F.array(*mins)
 
 
 def minhash_signature_staged(
@@ -973,19 +942,6 @@ def cluster_representatives(
 
 
 # ------------------------------------------------------- exact substring dedup
-
-
-def _gram_hash_col(gram_hash: str, k: int):
-    """k-gram key for ExactSubstr counting. `md5` (hex string) is the
-    engine-replayable default — the DuckDB oracle computes the same key.
-    `xxhash64` keys the SAME pipeline on an 8-byte long instead of a
-    32-char string: no hex-string allocation per position and ~1/4 the
-    exchange width on the count and dup-position joins. Output is
-    IDENTICAL either way (the hash is internal to counting; the driver
-    gate proves it by running the xx variant against the md5 oracle).
-    Collision risk 2^-64-scale, the package-wide digest convention."""
-    gram = F.expr(f"substring(_t, p, {k})")
-    return F.md5(gram) if gram_hash == "md5" else F.xxhash64(gram)
 
 
 def remove_duplicate_substrings(

@@ -89,19 +89,6 @@ class _Bits:
         self.nbits = 0
 
 
-def _build_tree(lengths: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman (RFC 1951 §3.2.2): {(n_bits, code): symbol}."""
-    tree: dict[tuple[int, int], int] = {}
-    code = 0
-    for ln in range(1, max(lengths, default=0) + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                tree[(ln, code)] = sym
-                code += 1
-        code <<= 1
-    return tree
-
-
 _LUT_BITS = 9
 
 
@@ -147,16 +134,6 @@ def _decode_sym_lut(bits: _Bits, lut, esc) -> int:
             sym = esc.get((ln, code))
             if sym is not None:
                 return sym
-    raise ValueError("inflate: bad Huffman code")
-
-
-def _decode_sym(bits: _Bits, tree: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for ln in range(1, 16):
-        code = (code << 1) | bits.take(1)  # codes are MSB-first
-        sym = tree.get((ln, code))
-        if sym is not None:
-            return sym
     raise ValueError("inflate: bad Huffman code")
 
 

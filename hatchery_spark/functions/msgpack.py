@@ -145,11 +145,6 @@ def decode(buf: bytes) -> Any:
     return v
 
 
-def decode_prefix(buf: bytes, off: int = 0) -> tuple[Any, int]:
-    """Decode one object starting at ``off``; return (value, new off)."""
-    return _decode_at(buf, off)
-
-
 def _need(buf: bytes, off: int, n: int) -> None:
     if off + n > len(buf):
         raise MsgpackError("truncated input")

@@ -16,7 +16,6 @@ parse.py's pandas engine exists for).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -146,7 +145,3 @@ def idna_decode_col(labels: pd.Series) -> pd.Series:
 @pandas_udf(T.StringType())
 def idna_encode_col(labels: pd.Series) -> pd.Series:
     return labels.map(idna_encode_label)
-
-
-def decode_idn(col: Column) -> Column:
-    return idna_decode_col(col)

@@ -49,10 +49,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(pieces).cast("int")
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("int")
-
-
 def _occurrences(text: Column, needle: str) -> Column:
     """Non-overlapping occurrence count of a literal substring (codegen-safe)."""
     return (

@@ -46,15 +46,6 @@ def b64url(col: Column) -> Column:
     )
 
 
-def unb64url(col: Column) -> Column:
-    """Decode unpadded base64url back to a string (padding restored)."""
-    clean = F.translate(col, "-_", "+/")
-    padded = F.concat(
-        clean, F.repeat(F.lit("="), (4 - F.length(clean) % 4) % 4)
-    )
-    return F.decode(F.unbase64(padded), "utf-8")
-
-
 def _hmac_udf(secret: str):
     key = secret.encode()
 

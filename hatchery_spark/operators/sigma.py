@@ -13,7 +13,7 @@ Compiler design (the 100 TB path):
   single scan, never a scan per rule;
 * alert fan-out is one ``explode`` of a compile-time array of
   ``(rule_id, level, matched)`` structs, filtered on ``matched`` — the
-  same single-pass explode shape as the router (router.py:39);
+  same single-pass explode shape as ``router.routed_union``;
 * the identical rule pack also renders to ANSI SQL (dual-render, the
   soundex/ULID posture), so a DuckDB oracle replays the exact semantics;
 * the condition grammar (and/or/not/parens) is a 30-line recursive-descent

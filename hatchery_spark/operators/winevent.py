@@ -51,11 +51,6 @@ def _esc(c: Column) -> Column:
     return F.replace(c, F.lit('"'), F.lit("&quot;"))
 
 
-def _esc_sql(e: str) -> str:
-    return ("replace(replace(replace(replace(" + e +
-            ", '&', '&amp;'), '<', '&lt;'), '>', '&gt;'), '\"', '&quot;')")
-
-
 _SEVERITY_EVENT_ID = [
     ("debug", 100), ("info", 200), ("warn", 300),
     ("error", 4625), ("critical", 4719),

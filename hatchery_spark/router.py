@@ -12,6 +12,10 @@ per-route filtered writes over ONE shared, cached, parsed+enriched DataFrame:
     cluster, routes can also be submitted from a driver thread pool (Spark's
     scheduler interleaves jobs); sequential actions over a cached DF are the
     simple, predictable default.
+  * per-sink counts (sink_counts) = ONE global aggregate, a conditional count
+    per route reshaped by stack; counting never materialises routed rows.
+    routed_union is the row-level surface (one explode of matching route ids)
+    for queries that need the routed rows themselves.
 
 A row matching k route predicates is written k times (one per sink) — identical
 to the reference, where multiple streams may select overlapping data. A row
@@ -20,6 +24,7 @@ matching none is dropped (no catch-all unless configured).
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Observation
@@ -53,16 +58,28 @@ def routed_union(df: DataFrame, routes: Sequence[RouteConfig]) -> DataFrame:
 
 
 def sink_counts(df: DataFrame, routes: Sequence[RouteConfig]) -> DataFrame:
-    """Per-sink aggregate counts: groupBy(route_id).count().
+    """Per-sink row counts as (route_id string, row_count bigint).
 
-    Partial (map-side) aggregation + final merge is Catalyst's job; route_id
-    cardinality == len(routes), so the shuffle is a few rows per task.
+    ONE global aggregate: a count(when(predicate, 1)) per route, reshaped by
+    stack into one row per route, keeping routes with row_count > 0. Equal to
+    routed_union(df, routes).groupBy("route_id").count() — a NULL predicate
+    does not count, a route with no rows drops out, empty input gives an empty
+    result — without building and exploding a tag array per row. The only
+    shuffle is the one-row partial aggregate per task. Route ids enter the
+    plan as literals (never spliced into SQL text), and are distinct
+    (config.validate_routes).
     """
-    return (
-        routed_union(df, routes)
-        .groupBy("route_id")
-        .agg(F.count(F.lit(1)).alias("row_count"))
+    if not routes:
+        return df.sparkSession.createDataFrame([], "route_id string, row_count bigint")
+    counts = df.agg(
+        *[F.count(F.when(F.expr(r.predicate), 1)).alias(f"_n{i}") for i, r in enumerate(routes)]
     )
+    pairs = chain.from_iterable(
+        (F.lit(r.route_id), F.col(f"_n{i}")) for i, r in enumerate(routes)
+    )
+    return counts.select(
+        F.stack(F.lit(len(routes)), *pairs).alias("route_id", "row_count")
+    ).filter(F.col("row_count") > 0)
 
 
 def ordered_for_sink(df: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:

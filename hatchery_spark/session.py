@@ -38,6 +38,17 @@ def master_preconfigured() -> bool:
         return False
 
 
+def default_driver_memory() -> str:
+    """Local-mode heap: 80g, capped at 60% of the host's physical memory.
+
+    Local mode is a single JVM, so the driver heap IS executor memory, and
+    undersizing shows up as GC variance on string-heavy stages. A heap larger
+    than the host is worse: G1 grows the heap instead of collecting, until the
+    kernel's OOM killer ends the whole run."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(80, int(host * 0.6) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "hatchery_spark",
     cpus: int | None = None,
@@ -62,11 +73,8 @@ def get_spark(
         # local test/bench harness: we own master + heap sizing. Under
         # spark-submit on a real cluster, both belong to the submitter.
         builder = builder.master(f"local[{cpus}]").config(
-            # local mode = single JVM: the driver heap IS executor memory. Size
-            # it to the host (the 128 GiB sandbox) — undersizing shows up as
-            # massive GC variance on string-heavy stages.
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "80g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     builder = (
         builder.appName(app_name)

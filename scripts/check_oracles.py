@@ -9,12 +9,14 @@ Usage: python scripts/check_oracles.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script belongs to
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hatchery_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
@@ -43,7 +45,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("check_oracles", cpus=8)
+    spark = get_spark("check_oracles")  # SPARK_GRAFT_CPUS, as Tier-1
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

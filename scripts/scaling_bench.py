@@ -445,7 +445,7 @@ Two single-box ceilings calibrated under the SAME probe gating:
 **Job vs scan ceiling        = {eff_median} / {scan_ceiling} = {eff_vs_scan}**
 
 (job-vs-scan >= 0.8 means the pipeline stages — parse, broadcast join,
-explode router, partial aggregation — add no serial bottleneck beyond the
+per-route conditional counts, partial aggregation — add no serial bottleneck beyond the
 scan itself; on a multi-node cluster, where scan bandwidth scales with
 executors, that is the number that predicts N→4N behavior. The raw single-box
 number under-reports a real cluster because the extra 24 threads here share

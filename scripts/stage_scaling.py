@@ -2,7 +2,7 @@
 
 Companion to scaling_bench.py (same pinned-parallelism protocol, same probe
 gating). The job is a linear pipeline — scan → parse → broadcast enrich →
-explode router → partial agg — so each stage is measured as a PREFIX of the
+per-route counts (one global aggregate) — so each stage is measured as a PREFIX of the
 plan with a cheap forcing aggregate over exactly the columns that stage
 produces (so column pruning cannot skip the stage's work), and a stage's
 incremental cost is prefix_i − prefix_{i−1} at each parallelism level.
@@ -10,8 +10,8 @@ incremental cost is prefix_i − prefix_{i−1} at each parallelism level.
 Stage-level efficiency = (Δt8 / Δt32) / 4 attributes the single-box scaling
 gap to specific stages: scan/decompress is memory-bandwidth-bound (shared by
 all 32 threads on ONE box, scales per-node on a real cluster); parse is
-string-heavy codegen; enrich adds a broadcast hash probe; route+agg adds the
-explode + partial aggregation. Writes a markdown table appended to
+string-heavy codegen; enrich adds a broadcast hash probe; route_agg adds one
+count(when(predicate, 1)) per route in a single global aggregate. Writes a markdown table appended to
 BENCH/BASELINE.md and prints one JSON line.
 
 Usage: python scripts/stage_scaling.py [n_rows] [n_clean] [max_attempts]
@@ -82,13 +82,14 @@ def main() -> None:
             ["conv_id", "text", "actor", "action", "resource", "severity",
              "service", "category"],
         ),
-        # + the single-pass explode router (still forced through the same sum)
+        # + the row-level router: routed_union's explode of matching route ids
+        # (auxiliary, forced through the same sum)
         "route": lambda k: force(
             routed_union(enrich_turns(parse_turns(src(k)), catalog), DEFAULT_ROUTES),
             ["conv_id", "text", "actor", "action", "resource", "severity",
              "service", "category", "route_id"],
         ),
-        # + the per-sink partial aggregation (the full measured job)
+        # + sink_counts: one conditional count per route (the full measured job)
         "route_agg": lambda k: sink_counts(
             enrich_turns(parse_turns(src(k)), catalog), DEFAULT_ROUTES
         ),
@@ -148,8 +149,9 @@ def main() -> None:
     med = {key: min(r[key] for r in use)
            for key in use[0] if key != "clean"}
 
-    # "route" is NOT a prefix of route_agg (its forcing sum hashes text once
-    # per EXPLODED row, work sink_counts never does) — report it as an
+    # "route" is NOT a prefix of route_agg (it explodes one row per matching
+    # route and hashes text per routed row; sink_counts builds no per-row
+    # route tags at all) — report it as an
     # auxiliary absolute row, and chain increments over the true prefixes
     chain = [name for name in order if name != "route"]
     rows = []
@@ -168,7 +170,7 @@ def main() -> None:
     if "route" in order:
         t8, t32 = med["route_8"], med["route_32"]
         rows.append({
-            "stage": "route (auxiliary: explode router forced per-routed-row)",
+            "stage": "route (auxiliary: routed_union forced per routed row)",
             "t8": round(t8, 3), "t32": round(t32, 3), "dt8": None, "dt32": None,
             "eff_cumulative": round((t8 / t32) / 4, 3), "eff_incremental": None,
         })

@@ -1,11 +1,14 @@
 """bench.py stays in sync with the driver-query catalog."""
 
 import ast
+import os
 import re
+
+BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
 
 
 def _bench_query_names():
-    src = open("/root/repo/bench.py").read()
+    src = open(BENCH).read()
     # every ("name", dq.q_fn) pair in the measured list
     return set(re.findall(r'\("([a-z0-9_]+)",\s*dq\.q_[a-z0-9_]+\)', src))
 
@@ -20,7 +23,7 @@ def test_bench_names_exist_in_catalog():
 
 
 def test_bench_callables_resolve():
-    src = open("/root/repo/bench.py").read()
+    src = open(BENCH).read()
     fns = set(re.findall(r"dq\.(q_[a-z0-9_]+)", src))
     from hatchery_spark.plans import driver_queries as dq
 
@@ -29,4 +32,4 @@ def test_bench_callables_resolve():
 
 
 def test_bench_parses():
-    ast.parse(open("/root/repo/bench.py").read())
+    ast.parse(open(BENCH).read())

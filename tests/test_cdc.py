@@ -56,3 +56,11 @@ def test_is_first_marks_exactly_one_occurrence(spark):
 def test_short_text_single_chunk(spark):
     by = _chunks(spark, [(1, "abc")], w=8)  # shorter than the window
     assert len(by[1]) == 1 and by[1][0].chunk_len == 3
+
+
+def test_empty_and_null_documents_yield_no_chunks(spark):
+    # an empty or NULL document produces no chunk rows and fails nothing;
+    # the other documents of the same batch still chunk
+    by = _chunks(spark, [(1, ""), (2, None), (3, "abc")], w=8)
+    assert set(by) == {3}
+    assert by[3][0].chunk_len == 3

@@ -1,4 +1,5 @@
 import json
+import os
 import subprocess
 import sys
 
@@ -7,6 +8,8 @@ import pytest
 from hatchery_spark.cli import build_selectors, load_routes, parse_args
 from hatchery_spark.config import DEFAULT_ROUTES, select_routes
 from hatchery_spark.datagen import transcripts_df
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_selector_building():
@@ -49,7 +52,7 @@ def test_cli_end_to_end_subprocess(spark, tmp_path):
             "--input", inp, "--out", str(tmp_path / "out"),
             "--run-ts", "2025-06-04 00:00:00", "--cpus", "4", "-t", "security",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
@@ -64,13 +67,12 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     check route counts — the north rule's packaging requirement, not a
     python -m approximation. The zip is the ONLY source of package code on the
     submitted job's path (cwd is a temp dir)."""
-    import os
     import shutil
 
     if shutil.which("spark-submit") is None:
         pytest.skip("spark-submit not on PATH")
     build = subprocess.run(
-        ["bash", "scripts/package.sh"], cwd="/root/repo",
+        ["bash", "scripts/package.sh"], cwd=REPO,
         capture_output=True, text=True, timeout=120,
     )
     assert build.returncode == 0, build.stderr
@@ -81,8 +83,8 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
         [
             "spark-submit", "--master", "local[4]",
             "--conf", "spark.ui.enabled=false",
-            "--py-files", "/root/repo/dist/hatchery_spark.zip",
-            "/root/repo/dist/main.py",
+            "--py-files", os.path.join(REPO, "dist", "hatchery_spark.zip"),
+            os.path.join(REPO, "dist", "main.py"),
             "--input", inp, "--out", str(tmp_path / "out"),
             "--run-ts", "2025-06-04 00:00:00", "-t", "security",
         ],
@@ -116,7 +118,7 @@ def test_cli_compact_mode(spark, tmp_path):
             "--compact", inp, str(tmp_path / "compacted"),
             "--compact-target-mb", "64", "--cpus", "4",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
@@ -134,7 +136,7 @@ def test_cli_compact_missing_src_clean_error(tmp_path):
             "--compact", str(tmp_path / "does_not_exist"), str(tmp_path / "dst"),
             "--cpus", "2",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert out.returncode == 2
     assert "--compact failed" in out.stderr
@@ -177,7 +179,7 @@ def test_cli_flagship_sf0001_sink_parity(spark, tmp_path):
             "--input", inp, "--out", out_dir,
             "--run-ts", "2025-06-04 00:00:00", "--cpus", "4", "-a",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])

@@ -1,9 +1,11 @@
 import importlib
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, not whatever is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 entry_mod = importlib.import_module("__spark_entry__")
 

@@ -74,6 +74,58 @@ def test_per_sink_count_parity(spark, transcripts):
     assert got == want
 
 
+PARITY_ROUTES = [
+    RouteConfig("errors", predicate="severity IN ('error', 'critical')"),
+    RouteConfig("slack", predicate="tool = 'slack'"),
+    RouteConfig("never", predicate="tool = 'no-such-tool'"),
+    RouteConfig("o'brien's 'quoted' route", predicate="true"),
+]
+
+
+@pytest.fixture(scope="module")
+def null_keyed(spark):
+    return spark.createDataFrame(
+        [
+            ("slack", "error"),
+            ("slack", None),  # NULL severity: "errors" predicate is NULL
+            (None, "critical"),  # NULL tool: "slack" predicate is NULL
+            (None, None),  # both NULL
+            ("okta", "info"),
+        ],
+        "tool string, severity string",
+    )
+
+
+@pytest.mark.parametrize("case", ["null_predicates", "empty_frame", "enriched"])
+def test_sink_counts_equals_routed_union_groupby(spark, transcripts, null_keyed, case):
+    df = {
+        "null_predicates": lambda: null_keyed,
+        "empty_frame": lambda: null_keyed.limit(0),
+        "enriched": lambda: prepare(transcripts, service_catalog_df(spark)),
+    }[case]()
+    got = sorted(map(tuple, sink_counts(df, PARITY_ROUTES).collect()))
+    want = sorted(
+        map(tuple, routed_union(df, PARITY_ROUTES).groupBy("route_id").count().collect())
+    )
+    assert got == want
+    # a route that matches no row drops out; the quoted id survives as a literal
+    assert "never" not in dict(got)
+    if case == "null_predicates":
+        assert dict(got) == {"errors": 2, "slack": 2, "o'brien's 'quoted' route": 5}
+    if case == "empty_frame":
+        assert got == []
+
+
+def test_sink_counts_schema(spark, null_keyed):
+    out = sink_counts(null_keyed, PARITY_ROUTES)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("route_id", "string"),
+        ("row_count", "bigint"),
+    ]
+    empty = sink_counts(null_keyed, [])
+    assert empty.columns == ["route_id", "row_count"] and empty.collect() == []
+
+
 def test_ordering_stable_across_shuffle_partitions(spark, transcripts):
     # per-file ordering by (conv_id, turn_idx) must hold regardless of
     # spark.sql.shuffle.partitions (SURVEY §5.4)

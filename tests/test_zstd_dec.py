@@ -1,5 +1,6 @@
 """zstd decoder: libzstd interop across levels/frame options, xxh64."""
 
+import os
 import random
 
 import pyarrow as pa
@@ -32,7 +33,7 @@ def _cases():
         bytes(random.randrange(256) for _ in range(5000)),
         b"ab" * 40000,
         bytes(random.choice(b"abcdefgh") for _ in range(100000)),  # FSE tables
-        open("/root/repo/SURVEY.md", "rb").read(),  # 4-stream huffman
+        open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SURVEY.md"), "rb").read(),  # 4-stream huffman
     ]
 
 
