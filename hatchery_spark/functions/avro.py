@@ -24,7 +24,6 @@ deployment points the same decode at ``spark.read.format("binaryFile")``.
 
 from __future__ import annotations
 
-import io
 import json
 import struct
 import zlib
@@ -34,46 +33,29 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hatchery_spark.functions.npwire import (
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag,
+)
+
 MAGIC = b"Obj\x01"
 
 
 # ---------------------------------------------------------------------------
-# primitive codecs
+# primitive codecs (longs are zigzag varints: functions/npwire.py)
 # ---------------------------------------------------------------------------
 
 
-def write_long(out: io.BytesIO, n: int) -> None:
-    z = (n << 1) ^ (n >> 63)
-    z &= (1 << 64) - 1
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.write(bytes([b | 0x80]))
-        else:
-            out.write(bytes([b]))
-            return
-
-
-def read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    shift, acc = 0, 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
-
-
-def write_bytes(out: io.BytesIO, data: bytes) -> None:
-    write_long(out, len(data))
-    out.write(data)
+def write_bytes(out: bytearray, data: bytes) -> None:
+    write_uvarint(out, zigzag(len(data)))
+    out += data
 
 
 def read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
-    n, pos = read_long(buf, pos)
+    n, pos = read_uvarint(buf, pos)
+    n = unzigzag(n)
     return buf[pos : pos + n], pos + n
 
 
@@ -82,14 +64,14 @@ def read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
 # ---------------------------------------------------------------------------
 
 
-def _encode_value(out: io.BytesIO, schema: Any, v: Any) -> None:
+def _encode_value(out: bytearray, schema: Any, v: Any) -> None:
     if isinstance(schema, list):  # union: index then value
         if v is None and "null" in schema:
-            write_long(out, schema.index("null"))
+            write_uvarint(out, zigzag(schema.index("null")))
             return
         for i, branch in enumerate(schema):
             if branch != "null":
-                write_long(out, i)
+                write_uvarint(out, zigzag(i))
                 _encode_value(out, branch, v)
                 return
         raise ValueError("union has no non-null branch")
@@ -97,52 +79,53 @@ def _encode_value(out: io.BytesIO, schema: Any, v: Any) -> None:
     if t == "null":
         return
     if t == "boolean":
-        out.write(b"\x01" if v else b"\x00")
+        out += b"\x01" if v else b"\x00"
     elif t in ("int", "long"):
-        write_long(out, int(v))
+        write_uvarint(out, zigzag(int(v)))
     elif t == "float":
-        out.write(struct.pack("<f", float(v)))
+        out += struct.pack("<f", float(v))
     elif t == "double":
-        out.write(struct.pack("<d", float(v)))
+        out += struct.pack("<d", float(v))
     elif t == "string":
         write_bytes(out, str(v).encode("utf-8"))
     elif t == "bytes":
         write_bytes(out, bytes(v))
     elif t == "fixed":
-        out.write(bytes(v))
+        out += bytes(v)
     elif t == "enum":
-        write_long(out, schema["symbols"].index(v))
+        write_uvarint(out, zigzag(schema["symbols"].index(v)))
     elif t == "record":
         for f in schema["fields"]:
             _encode_value(out, f["type"], v[f["name"]])
     elif t == "array":
         if v:
-            write_long(out, len(v))
+            write_uvarint(out, zigzag(len(v)))
             for item in v:
                 _encode_value(out, schema["items"], item)
-        write_long(out, 0)
+        write_uvarint(out, 0)
     elif t == "map":
         if v:
-            write_long(out, len(v))
+            write_uvarint(out, zigzag(len(v)))
             for k, item in v.items():
                 write_bytes(out, k.encode("utf-8"))
                 _encode_value(out, schema["values"], item)
-        write_long(out, 0)
+        write_uvarint(out, 0)
     else:
         raise ValueError(f"unsupported Avro type {t!r}")
 
 
 def _decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
     if isinstance(schema, list):
-        idx, pos = read_long(buf, pos)
-        return _decode_value(buf, pos, schema[idx])
+        idx, pos = read_uvarint(buf, pos)
+        return _decode_value(buf, pos, schema[unzigzag(idx)])
     t = schema["type"] if isinstance(schema, dict) else schema
     if t == "null":
         return None, pos
     if t == "boolean":
         return buf[pos] == 1, pos + 1
     if t in ("int", "long"):
-        return read_long(buf, pos)
+        z, pos = read_uvarint(buf, pos)
+        return unzigzag(z), pos
     if t == "float":
         return struct.unpack("<f", buf[pos : pos + 4])[0], pos + 4
     if t == "double":
@@ -156,8 +139,8 @@ def _decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
         n = schema["size"]
         return buf[pos : pos + n], pos + n
     if t == "enum":
-        idx, pos = read_long(buf, pos)
-        return schema["symbols"][idx], pos
+        idx, pos = read_uvarint(buf, pos)
+        return schema["symbols"][unzigzag(idx)], pos
     if t == "record":
         rec = {}
         for f in schema["fields"]:
@@ -166,12 +149,13 @@ def _decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
     if t == "array":
         items = []
         while True:
-            n, pos = read_long(buf, pos)
+            n, pos = read_uvarint(buf, pos)
+            n = unzigzag(n)
             if n == 0:
                 break
             if n < 0:  # block with byte-size hint
                 n = -n
-                _, pos = read_long(buf, pos)
+                _, pos = read_uvarint(buf, pos)
             for _ in range(n):
                 item, pos = _decode_value(buf, pos, schema["items"])
                 items.append(item)
@@ -179,12 +163,13 @@ def _decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
     if t == "map":
         m = {}
         while True:
-            n, pos = read_long(buf, pos)
+            n, pos = read_uvarint(buf, pos)
+            n = unzigzag(n)
             if n == 0:
                 break
             if n < 0:
                 n = -n
-                _, pos = read_long(buf, pos)
+                _, pos = read_uvarint(buf, pos)
             for _ in range(n):
                 key, pos = read_bytes(buf, pos)
                 m[key.decode("utf-8")], pos = _decode_value(buf, pos, schema["values"])
@@ -209,28 +194,27 @@ def _write_ocf_frames(
     sync = sync or bytes(range(16))
     if len(sync) != 16:
         raise ValueError("sync marker must be 16 bytes")
-    out = io.BytesIO()
-    out.write(MAGIC)
+    out = bytearray(MAGIC)
     meta = {
         "avro.schema": json.dumps(schema).encode("utf-8"),
         "avro.codec": codec.encode("ascii"),
     }
-    write_long(out, len(meta))
+    write_uvarint(out, zigzag(len(meta)))
     for k, v in sorted(meta.items()):
         write_bytes(out, k.encode("ascii"))
         write_bytes(out, v)
-    write_long(out, 0)
-    out.write(sync)
+    write_uvarint(out, 0)
+    out += sync
     for count, payload in blocks:
         if codec == "deflate":
             payload = zlib.compress(payload)[2:-4]  # raw RFC-1951, no wrapper
         elif codec != "null":
             raise ValueError(f"unsupported codec {codec}")
-        write_long(out, count)
-        write_long(out, len(payload))
-        out.write(payload)
-        out.write(sync)
-    return out.getvalue()
+        write_uvarint(out, zigzag(count))
+        write_uvarint(out, zigzag(len(payload)))
+        out += payload
+        out += sync
+    return bytes(out)
 
 
 def write_ocf(
@@ -243,10 +227,10 @@ def write_ocf(
     blocks = []
     for i in range(0, len(records), records_per_block):
         chunk = records[i : i + records_per_block]
-        body = io.BytesIO()
+        body = bytearray()
         for rec in chunk:
             _encode_value(body, schema, rec)
-        blocks.append((len(chunk), body.getvalue()))
+        blocks.append((len(chunk), bytes(body)))
     return _write_ocf_frames(schema, blocks, codec, sync)
 
 
@@ -325,40 +309,53 @@ def _compile_flat_decoder(schema: dict):
     return decode_block
 
 
-def parse_ocf(buf: bytes) -> tuple[dict, list[dict]]:
+def _read_ocf(buf: bytes) -> tuple[Any, Iterator[tuple[int, bytes]]]:
+    """OCF header → (writer schema, lazy (record count, decompressed
+    payload) per block, sync markers checked)."""
     if buf[:4] != MAGIC:
         raise ValueError("not an Avro object container file")
     pos = 4
     meta = {}
     while True:
-        n, pos = read_long(buf, pos)
+        n, pos = read_uvarint(buf, pos)
+        n = unzigzag(n)
         if n == 0:
             break
         if n < 0:
             n = -n
-            _, pos = read_long(buf, pos)
+            _, pos = read_uvarint(buf, pos)
         for _ in range(n):
             k, pos = read_bytes(buf, pos)
             v, pos = read_bytes(buf, pos)
             meta[k.decode("ascii")] = v
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode("ascii")
-    fast = _compile_flat_decoder(schema)
     sync = buf[pos : pos + 16]
-    pos += 16
+
+    def blocks(pos: int) -> Iterator[tuple[int, bytes]]:
+        while pos < len(buf):
+            count, pos = read_uvarint(buf, pos)
+            size, pos = read_uvarint(buf, pos)
+            size = unzigzag(size)
+            payload = buf[pos : pos + size]
+            pos += size
+            if buf[pos : pos + 16] != sync:
+                raise ValueError(f"sync marker mismatch at offset {pos}")
+            pos += 16
+            if codec == "deflate":
+                payload = zlib.decompress(payload, wbits=-15)
+            elif codec != "null":
+                raise ValueError(f"unsupported codec {codec}")
+            yield unzigzag(count), payload
+
+    return schema, blocks(pos + 16)
+
+
+def parse_ocf(buf: bytes) -> tuple[dict, list[dict]]:
+    schema, blocks = _read_ocf(buf)
+    fast = _compile_flat_decoder(schema)
     records = []
-    while pos < len(buf):
-        count, pos = read_long(buf, pos)
-        size, pos = read_long(buf, pos)
-        payload = buf[pos : pos + size]
-        pos += size
-        if buf[pos : pos + 16] != sync:
-            raise ValueError(f"sync marker mismatch at offset {pos}")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, wbits=-15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec}")
+    for count, payload in blocks:
         if fast is not None:
             records.extend(fast(payload, count))
             continue
@@ -574,21 +571,22 @@ def _skip_value(buf: bytes, pos: int, schema: Any) -> int:
     """Advance past a value without materializing it (writer-only
     fields)."""
     if isinstance(schema, list):
-        idx, pos = read_long(buf, pos)
-        return _skip_value(buf, pos, schema[idx])
+        idx, pos = read_uvarint(buf, pos)
+        return _skip_value(buf, pos, schema[unzigzag(idx)])
     t = _tname(schema)
     if t == "null":
         return pos
     if t == "boolean":
         return pos + 1
     if t in ("int", "long"):
-        return read_long(buf, pos)[1]
+        return read_uvarint(buf, pos)[1]
     if t == "float":
         return pos + 4
     if t == "double":
         return pos + 8
     if t in ("string", "bytes"):
-        n, pos = read_long(buf, pos)
+        n, pos = read_uvarint(buf, pos)
+        n = unzigzag(n)
         return pos + n
     if t == "record":
         for f in schema["fields"]:
@@ -596,12 +594,13 @@ def _skip_value(buf: bytes, pos: int, schema: Any) -> int:
         return pos
     if t in ("array", "map"):
         while True:
-            n, pos = read_long(buf, pos)
+            n, pos = read_uvarint(buf, pos)
+            n = unzigzag(n)
             if n == 0:
                 return pos
             if n < 0:  # size-hinted block: skip wholesale
-                size, pos = read_long(buf, pos)
-                pos += size
+                size, pos = read_uvarint(buf, pos)
+                pos += unzigzag(size)
                 continue
             inner = schema["items"] if t == "array" else schema["values"]
             for _ in range(n):
@@ -637,8 +636,8 @@ def decode_resolved(
     fields filled from their defaults, numeric/string promotions, union
     branch re-resolution."""
     if isinstance(writer, list):  # writer union: branch index on the wire
-        idx, pos = read_long(buf, pos)
-        return decode_resolved(buf, pos, writer[idx], reader)
+        idx, pos = read_uvarint(buf, pos)
+        return decode_resolved(buf, pos, writer[unzigzag(idx)], reader)
     if isinstance(reader, list):  # reader union: first matching branch
         wt = _tname(writer)
         for branch in reader:
@@ -676,12 +675,13 @@ def decode_resolved(
     if wt == "array" and rt == "array":
         items = []
         while True:
-            n, pos = read_long(buf, pos)
+            n, pos = read_uvarint(buf, pos)
+            n = unzigzag(n)
             if n == 0:
                 return items, pos
             if n < 0:
                 n = -n
-                _, pos = read_long(buf, pos)
+                _, pos = read_uvarint(buf, pos)
             for _ in range(n):
                 item, pos = decode_resolved(
                     buf, pos, writer["items"], reader["items"]
@@ -690,12 +690,13 @@ def decode_resolved(
     if wt == "map" and rt == "map":
         m = {}
         while True:
-            n, pos = read_long(buf, pos)
+            n, pos = read_uvarint(buf, pos)
+            n = unzigzag(n)
             if n == 0:
                 return m, pos
             if n < 0:
                 n = -n
-                _, pos = read_long(buf, pos)
+                _, pos = read_uvarint(buf, pos)
             for _ in range(n):
                 k, pos = read_bytes(buf, pos)
                 m[k.decode("utf-8")], pos = decode_resolved(
@@ -707,38 +708,9 @@ def decode_resolved(
 
 def parse_ocf_resolved(buf: bytes, reader_schema: dict) -> list[dict]:
     """parse_ocf, but every record decoded AS `reader_schema`."""
-    if buf[:4] != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta = {}
-    while True:
-        n, pos = read_long(buf, pos)
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            _, pos = read_long(buf, pos)
-        for _ in range(n):
-            k, pos = read_bytes(buf, pos)
-            v, pos = read_bytes(buf, pos)
-            meta[k.decode("ascii")] = v
-    writer = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode("ascii")
-    sync = buf[pos : pos + 16]
-    pos += 16
+    writer, blocks = _read_ocf(buf)
     records = []
-    while pos < len(buf):
-        count, pos = read_long(buf, pos)
-        size, pos = read_long(buf, pos)
-        payload = buf[pos : pos + size]
-        pos += size
-        if buf[pos : pos + 16] != sync:
-            raise ValueError(f"sync marker mismatch at offset {pos}")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, wbits=-15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec}")
+    for count, payload in blocks:
         p = 0
         for _ in range(count):
             rec, p = decode_resolved(payload, p, writer, reader_schema)

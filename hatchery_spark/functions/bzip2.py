@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hatchery_spark.functions.npwire import MsbBits
+
 __all__ = ["bunzip2", "bzip2_decode_col"]
 
 _BLOCK_MAGIC = 0x314159265359
@@ -62,29 +64,6 @@ def _bz_crc_fast(data: bytes) -> int:
     return int(f"{zlib.crc32(rev):032b}"[::-1], 2)
 
 
-class _Bits:
-    """MSB-first bit reader over a precomputed ASCII-'0'/'1' expansion:
-    ``take(n)`` is one bytes slice + ``int(s, 2)`` (both C speed) instead
-    of an n-iteration Python loop. The expansion is 8 bytes per input
-    byte — fine for row-sized blobs; reads past the real end raise
-    ValueError (the per-row dead-letter channel), never IndexError."""
-
-    def __init__(self, buf: bytes, pos_bits: int = 0) -> None:
-        bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
-        self.nbits = len(bits)
-        # padding guard: partial Huffman reads near EOF may peek past the
-        # end; the stream's own magics/CRCs reject any decode using it
-        self.s = (bits + ord("0")).astype(np.uint8).tobytes() + b"0" * 64
-        self.p = pos_bits
-
-    def take(self, n: int) -> int:
-        p = self.p
-        if p + n > self.nbits:
-            raise ValueError("bzip2: truncated stream")
-        self.p = p + n
-        return int(self.s[p : p + n], 2)
-
-
 def _huff_decode_tables(lengths: list[int]):
     """bzip2 canonical Huffman: (limit, base, perm) per the reference
     decoder's scheme — decode by extending the code until it is <= the
@@ -111,14 +90,14 @@ def _huff_decode_tables(lengths: list[int]):
     return min_len, max_len, limit, base, perm
 
 
-def _read_huff_symbol(bits: _Bits, table) -> int:
+def _read_huff_symbol(bits: MsbBits, table) -> int:
     """One slice+parse for the minimum length, then per-bit extension via
     direct byte indexing into the expanded bit string (no take() call per
     bit — this loop runs once per decoded symbol and dominates decode)."""
     min_len, max_len, limit, base, perm = table
     s, p = bits.s, bits.p
     if p + min_len > bits.nbits:
-        raise ValueError("bzip2: truncated stream")
+        raise ValueError("truncated bitstream")
     ln = min_len
     code = int(s[p : p + min_len], 2)
     while code > limit[ln]:
@@ -138,7 +117,8 @@ def bunzip2(blob: bytes) -> bytes:
     level = blob[3] - ord("0")
     if not 1 <= level <= 9:
         raise ValueError("bzip2: bad block-size level")
-    bits = _Bits(blob, 32)
+    bits = MsbBits(blob)
+    bits.p = 32  # past the 4-byte "BZh<level>" header
     out = bytearray()
     stream_crc = 0
     while True:

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import struct
 
+from hatchery_spark.functions.npwire import MsbBits
+
 
 class _BitWriter:
     def __init__(self) -> None:
@@ -53,20 +55,6 @@ class _BitWriter:
         return ((self.acc << pad) & ((1 << total) - 1)).to_bytes(
             total // 8, "big"
         ) if total else b""
-
-
-class _BitReader:
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, bits: int) -> int:
-        out = 0
-        for _ in range(bits):
-            byte = self.buf[self.pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
 
 
 # timestamp delta-of-delta buckets: (prefix, prefix_bits, payload_bits,
@@ -131,47 +119,47 @@ def encode_series(ts: list[int], values: list[float]) -> bytes:
 
 
 def decode_series(blob: bytes) -> tuple[list[int], list[float]]:
-    r = _BitReader(blob)
-    n = r.read(32)
+    r = MsbBits(blob)
+    n = r.take(32)
     if n == 0:
         return [], []
-    t = r.read(64)
+    t = r.take(64)
     if t >= 1 << 63:
         t -= 1 << 64
-    v = r.read(64)
+    v = r.take(64)
     ts = [t]
     vals = [struct.unpack(">d", struct.pack(">Q", v))[0]]
     delta = 0
     lead, mlen = -1, -1
     for _ in range(n - 1):
-        if r.read(1) == 0:
+        if r.take(1) == 0:
             dod = 0
         else:
             matched = False
             for prefix, pbits, bits, lo, _hi in _TS_BUCKETS:
                 # prefix already consumed 1 bit ('1...'); read the rest
-                if r.read(1) == 0:
-                    dod = r.read(bits) + lo
+                if r.take(1) == 0:
+                    dod = r.take(bits) + lo
                     matched = True
                     break
             if not matched:
-                dod = r.read(32)
+                dod = r.take(32)
                 if dod >= 1 << 31:
                     dod -= 1 << 32
         delta += dod
         t += delta
         ts.append(t)
-        if r.read(1) == 0:
+        if r.take(1) == 0:
             pass  # identical value
         else:
-            if r.read(1) == 0:  # '10' — reuse previous block
+            if r.take(1) == 0:  # '10' — reuse previous block
                 if lead < 0:
                     raise ValueError("'10' control with no prior block")
-                xor = r.read(mlen) << (64 - lead - mlen)
+                xor = r.take(mlen) << (64 - lead - mlen)
             else:               # '11' — new block
-                lead = r.read(5)
-                mlen = r.read(6) + 1
-                xor = r.read(mlen) << (64 - lead - mlen)
+                lead = r.take(5)
+                mlen = r.take(6) + 1
+                xor = r.take(mlen) << (64 - lead - mlen)
             v ^= xor
         vals.append(struct.unpack(">d", struct.pack(">Q", v))[0])
     return ts, vals

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import pandas as pd
 
+from hatchery_spark.functions.npwire import LsbBits, read_fixed
+
 _LEN_BASE = [
     3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
     35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258,
@@ -40,53 +42,6 @@ _DIST_EXTRA = [
     7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13,
 ]
 _CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15]
-
-
-class _Bits:
-    """LSB-first reader over an int accumulator: take(n) is two int ops
-    plus an occasional byte refill, not an n-iteration loop. Only real
-    bytes ever enter the accumulator, so running out raises exactly where
-    the per-bit reader did."""
-
-    __slots__ = ("buf", "pos", "acc", "nbits")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self, need: int) -> None:
-        buf, pos, acc, nb = self.buf, self.pos, self.acc, self.nbits
-        n = len(buf)
-        while nb < need and pos < n:
-            acc |= buf[pos] << nb
-            pos += 1
-            nb += 8
-        self.pos, self.acc, self.nbits = pos, acc, nb
-
-    def take(self, n: int) -> int:
-        if self.nbits < n:
-            self._fill(n)
-            if self.nbits < n:
-                raise ValueError("inflate: truncated stream")
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
-
-    def byte_pos(self) -> int:
-        """Byte offset of the next unconsumed BYTE after dropping to a
-        byte boundary (stored-block framing)."""
-        drop = self.nbits & 7
-        self.acc >>= drop
-        self.nbits -= drop
-        return self.pos - self.nbits // 8
-
-    def seek_byte(self, p: int) -> None:
-        self.pos = p
-        self.acc = 0
-        self.nbits = 0
 
 
 _LUT_BITS = 9
@@ -115,14 +70,14 @@ def _build_lut(lengths: list[int], lut_bits: int = _LUT_BITS):
     return lut, esc
 
 
-def _decode_sym_lut(bits: _Bits, lut, esc) -> int:
+def _decode_sym_lut(bits: LsbBits, lut, esc) -> int:
     if bits.nbits < _LUT_BITS:
-        bits._fill(_LUT_BITS)
+        bits.fill(_LUT_BITS)
     entry = lut[bits.acc & 0x1FF]
     if entry is not None:
         sym, ln = entry
         if bits.nbits < ln:
-            raise ValueError("inflate: truncated stream")
+            raise ValueError("truncated bitstream")
         bits.acc >>= ln
         bits.nbits -= ln
         return sym
@@ -141,7 +96,7 @@ _FIXED_LIT_LUT = _build_lut([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
 _FIXED_DIST_LUT = _build_lut([5] * 30)
 
 
-def _read_dynamic(bits: _Bits):
+def _read_dynamic(bits: LsbBits):
     hlit = bits.take(5) + 257
     hdist = bits.take(5) + 1
     hclen = bits.take(4) + 4
@@ -169,21 +124,19 @@ def _read_dynamic(bits: _Bits):
 
 def inflate(buf: bytes) -> bytes:
     """Raw DEFLATE stream (zlib wbits=-15) → bytes."""
-    bits = _Bits(buf)
+    bits = LsbBits(buf)
     out = bytearray()
     while True:
         bfinal = bits.take(1)
         btype = bits.take(2)
         if btype == 0:  # stored
-            p = bits.byte_pos()
-            ln = int.from_bytes(buf[p : p + 2], "little")
-            nlen = int.from_bytes(buf[p + 2 : p + 4], "little")
-            if ln ^ nlen != 0xFFFF:
+            hdr, p = read_fixed(buf, bits.byte_pos(), 4)
+            ln = int.from_bytes(hdr[:2], "little")
+            if ln ^ int.from_bytes(hdr[2:], "little") != 0xFFFF:
                 raise ValueError("inflate: stored-block LEN/NLEN mismatch")
-            if p + 4 + ln > len(buf):
-                raise ValueError("inflate: truncated stream")
-            out += buf[p + 4 : p + 4 + ln]
-            bits.seek_byte(p + 4 + ln)
+            data, p = read_fixed(buf, p, ln)
+            out += data
+            bits.seek_byte(p)
         elif btype in (1, 2):
             (lit_lut, lit_esc), (dist_lut, dist_esc) = (
                 (_FIXED_LIT_LUT, _FIXED_DIST_LUT)

@@ -35,8 +35,9 @@ compressors are the package's OWN from-scratch codecs — snappy
 query exercises every decoder against wire data it did not write
 itself via gzip and zstd, and self-roundtrips the rest.
 
-CRC32C (Castagnoli, reflected poly 0x82F63B78) is implemented here —
-it is NOT zlib.crc32 — and pinned against the RFC 3720 check vector. A
+The batch CRC is CRC32C (Castagnoli, reflected poly 0x82F63B78), NOT
+zlib.crc32; it and the varints come from functions/npwire.py, and the
+CRC is pinned against the RFC 3720 check vector. A
 deterministic tamper fixture flips the last byte of every batch whose
 user_id % 17 == 3: the consumer detects the mismatch and emits a
 dead-letter row carrying only the frame-level base_offset (no field of
@@ -61,83 +62,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hatchery_spark.functions.lz4 import lz4_frame_compress, lz4_frame_decompress
+from hatchery_spark.functions.npwire import (
+    crc32c,
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag,
+)
 from hatchery_spark.functions.snappy import snappy_compress, snappy_decompress
 from hatchery_spark.functions.zstd_dec import zstd_decompress
 
 MAGIC = 2
 CODEC_NAMES = ["none", "gzip", "snappy", "lz4", "zstd"]
-
-# ---------------------------------------------------------------------------
-# CRC32C (Castagnoli) — table-driven, reflected polynomial 0x82F63B78
-# ---------------------------------------------------------------------------
-
-_CRC32C_TABLE = []
-for _i in range(256):
-    _c = _i
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
-
-
-# slicing-by-8 tables: _CRC32C_SLICE[k][b] = CRC of byte b followed by k
-# zero bytes (base table = k=0). Lets the hot loop consume 8 bytes per
-# Python iteration instead of one.
-_CRC32C_SLICE = [_CRC32C_TABLE]
-for _k in range(7):
-    _prev = _CRC32C_SLICE[-1]
-    _CRC32C_SLICE.append(
-        [(_v >> 8) ^ _CRC32C_TABLE[_v & 0xFF] for _v in _prev]
-    )
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFF
-    t0, t1, t2, t3, t4, t5, t6, t7 = _CRC32C_SLICE
-    nw = len(data) >> 3
-    if nw:
-        for w in struct.unpack_from(f"<{nw}Q", data):
-            x = w ^ crc
-            crc = (
-                t7[x & 0xFF]
-                ^ t6[(x >> 8) & 0xFF]
-                ^ t5[(x >> 16) & 0xFF]
-                ^ t4[(x >> 24) & 0xFF]
-                ^ t3[(x >> 32) & 0xFF]
-                ^ t2[(x >> 40) & 0xFF]
-                ^ t1[(x >> 48) & 0xFF]
-                ^ t0[x >> 56]
-            )
-    for b in data[nw << 3 :]:
-        crc = t0[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
-
-
-# ---------------------------------------------------------------------------
-# zigzag varints (Kafka records use zigzag for every varint field)
-# ---------------------------------------------------------------------------
-
-
-def write_varint(out: bytearray, n: int) -> None:
-    z = (n << 1) ^ (n >> 63)
-    while z & ~0x7F:
-        out.append((z & 0x7F) | 0x80)
-        z >>= 7
-    out.append(z)
-
-
-def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    z, shift = 0, 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        z |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 70:
-            raise ValueError("kafka: varint overflow")
-    return (z >> 1) ^ -(z & 1), pos
-
 
 def _compress(codec: int, raw: bytes) -> bytes:
     if codec == 0:
@@ -182,20 +118,20 @@ def encode_batch(
     for off_d, ts_ms, key, value, headers in rows:
         body = bytearray()
         body.append(0)  # record attributes (unused by the protocol today)
-        write_varint(body, ts_ms - base_ts)
-        write_varint(body, off_d)
-        write_varint(body, len(key))
+        write_uvarint(body, zigzag(ts_ms - base_ts))
+        write_uvarint(body, zigzag(off_d))
+        write_uvarint(body, zigzag(len(key)))
         body += key
-        write_varint(body, len(value))
+        write_uvarint(body, zigzag(len(value)))
         body += value
-        write_varint(body, len(headers))
+        write_uvarint(body, zigzag(len(headers)))
         for hk, hv in headers:
-            write_varint(body, len(hk))
+            write_uvarint(body, zigzag(len(hk)))
             body += hk
-            write_varint(body, len(hv))
+            write_uvarint(body, zigzag(len(hv)))
             body += hv
         rec = bytearray()
-        write_varint(rec, len(body))
+        write_uvarint(rec, zigzag(len(body)))
         stream += rec + body
     payload = _compress(codec, bytes(stream))
 
@@ -223,25 +159,30 @@ def decode_batch(buf: bytes) -> dict:
     stream = _decompress(codec, buf[21 + struct.calcsize(">hiqqqhii"):])
     pos, records = 0, []
     for _ in range(n_rec):
-        length, pos = read_varint(stream, pos)
-        end = pos + length
+        length, pos = read_uvarint(stream, pos)
+        end = pos + unzigzag(length)
         _attr = stream[pos]
         pos += 1
-        ts_d, pos = read_varint(stream, pos)
-        off_d, pos = read_varint(stream, pos)
-        klen, pos = read_varint(stream, pos)
+        ts_d, pos = read_uvarint(stream, pos)
+        off_d, pos = read_uvarint(stream, pos)
+        ts_d, off_d = unzigzag(ts_d), unzigzag(off_d)
+        klen, pos = read_uvarint(stream, pos)
+        klen = unzigzag(klen)
         key = bytes(stream[pos:pos + klen]) if klen >= 0 else None
         pos += max(klen, 0)
-        vlen, pos = read_varint(stream, pos)
+        vlen, pos = read_uvarint(stream, pos)
+        vlen = unzigzag(vlen)
         value = bytes(stream[pos:pos + vlen]) if vlen >= 0 else None
         pos += max(vlen, 0)
-        n_hdr, pos = read_varint(stream, pos)
+        n_hdr, pos = read_uvarint(stream, pos)
         headers = {}
-        for _ in range(n_hdr):
-            hklen, pos = read_varint(stream, pos)
+        for _ in range(unzigzag(n_hdr)):
+            hklen, pos = read_uvarint(stream, pos)
+            hklen = unzigzag(hklen)
             hk = stream[pos:pos + hklen].decode()
             pos += hklen
-            hvlen, pos = read_varint(stream, pos)
+            hvlen, pos = read_uvarint(stream, pos)
+            hvlen = unzigzag(hvlen)
             headers[hk] = bytes(stream[pos:pos + hvlen])
             pos += hvlen
         if pos != end:

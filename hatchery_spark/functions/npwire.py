@@ -1,19 +1,243 @@
-"""Vectorized variable-length wire-format primitives (numpy).
+"""Wire-format primitives shared by the from-scratch codecs.
 
-Shared by the from-scratch row-oriented codecs (Avro OCF, and any other
-zigzag-varint format): per-row Python loops over varint bytes dominate
-encode stages at 10^5+ rows/task, while the whole batch can be encoded
-with O(max_varint_len) vectorized passes instead.
+One definition of each byte-level building block the codecs in
+``functions/`` are made of:
 
-Byte-for-byte identical to the per-value reference encoders (asserted in
-tests): these helpers change throughput, never bytes.
+* **varints**: ``read_uvarint`` / ``write_uvarint`` (unsigned LEB128, the
+  Protobuf / Thrift-compact / Avro / Kafka / snappy / xz form) plus
+  ``zigzag`` / ``unzigzag`` for the signed formats. A varint longer than
+  ``VARINT_MAX_BYTES`` (10, enough for any uint64) raises ``ValueError``;
+  one cut short raises ``IndexError``, which the codecs' dead-letter
+  paths already catch.
+* **fixed-width reads**: ``read_fixed`` returns an exact-length slice or
+  raises ``ValueError``, so a truncated header or payload can never read
+  as zero bytes.
+* **bit readers**: ``LsbBits`` (LSB-first, int accumulator: DEFLATE and
+  zstd's FSE table headers) and ``MsbBits`` (MSB-first, precomputed
+  ASCII bit string: bzip2 and Gorilla). Reading past the end raises
+  ``ValueError("truncated bitstream")``.
+* **CRC32C** (Castagnoli), slicing-by-8: Kafka record batches, TFRecord.
+  Plain CRC-32 is ``zlib.crc32``.
+* **vectorized encoders**: ``zigzag_varint_encode`` (the batch form of
+  ``write_uvarint(out, zigzag(n))``) and ``rowcat`` for the Avro fast
+  writer: per-row Python loops over varint bytes dominate encode stages
+  at 10^5+ rows/task, while a whole batch encodes in O(max_varint_len)
+  numpy passes. Byte-for-byte identical to the scalar writer (asserted
+  in tests).
+
+What stays outside, and why:
+
+* ``zstd_dec.BackBits``: the only backward bitstream (sentinel bit,
+  reads consume downward).
+* ``jpeg._BitReader`` / ``_BitWriter``: they handle 0xFF00 byte stuffing
+  and are already shared by the three jpeg modules.
+* ``deflate_enc._BitWriter``: the only LSB-first writer.
+* ``gorilla._BitWriter``: the only MSB-first writer without stuffing.
+* ``bzip2._bz_crc``: the per-byte reference the tests pin
+  ``_bz_crc_fast`` against.
+* ``xz._crc64``: it has one user.
+* ``x509`` OID base-128: a different, big-endian format.
+* the two varint loops inlined in Avro's per-record decode loop
+  (``avro._compile_flat_decoder``): nobody has measured what replacing
+  them with calls would cost.
 """
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
-__all__ = ["zigzag_varint_encode", "rowcat"]
+__all__ = [
+    "VARINT_MAX_BYTES",
+    "read_uvarint",
+    "write_uvarint",
+    "zigzag",
+    "unzigzag",
+    "read_fixed",
+    "LsbBits",
+    "MsbBits",
+    "crc32c",
+    "zigzag_varint_encode",
+    "rowcat",
+]
+
+# ---------------------------------------------------------------------------
+# varints and fixed-width reads
+# ---------------------------------------------------------------------------
+
+VARINT_MAX_BYTES = 10  # ceil(64 / 7): the longest uint64 varint
+_VARINT_MAX_SHIFT = 7 * VARINT_MAX_BYTES
+_M64 = (1 << 64) - 1
+
+
+def read_uvarint(buf, pos: int) -> tuple[int, int]:
+    """Unsigned LEB128 at ``buf[pos]`` → (value, next pos)."""
+    b = buf[pos]
+    if b < 0x80:
+        return b, pos + 1
+    n = b & 0x7F
+    shift = 7
+    while True:
+        pos += 1
+        b = buf[pos]
+        n |= (b & 0x7F) << shift
+        if b < 0x80:
+            return n, pos + 1
+        shift += 7
+        if shift >= _VARINT_MAX_SHIFT:
+            raise ValueError("varint longer than 10 bytes")
+
+
+def write_uvarint(out: bytearray, n: int) -> None:
+    """Append unsigned LEB128 ``n`` (n ≥ 0) to ``out``."""
+    while n > 0x7F:
+        out.append((n & 0x7F) | 0x80)
+        n >>= 7
+    out.append(n)
+
+
+def zigzag(n: int) -> int:
+    """int64 → uint64, small magnitudes first: 0, -1, 1, -2 → 0, 1, 2, 3."""
+    return ((n << 1) ^ (n >> 63)) & _M64
+
+
+def unzigzag(z: int) -> int:
+    return (z >> 1) ^ -(z & 1)
+
+
+def read_fixed(buf, pos: int, n: int) -> tuple[bytes, int]:
+    """Exactly ``n`` bytes at ``buf[pos]`` → (slice, pos + n)."""
+    end = pos + n
+    if end > len(buf):
+        raise ValueError("truncated input")
+    return buf[pos:end], end
+
+
+# ---------------------------------------------------------------------------
+# bit readers
+# ---------------------------------------------------------------------------
+
+
+class LsbBits:
+    """LSB-first reader over an int accumulator: ``take(n)`` is two int
+    ops plus an occasional byte refill, not an n-iteration loop. Only
+    real bytes enter the accumulator, so running out raises exactly at
+    the end of the data."""
+
+    __slots__ = ("buf", "pos", "acc", "nbits")
+
+    def __init__(self, buf) -> None:
+        self.buf = buf
+        self.pos = 0
+        self.acc = 0
+        self.nbits = 0
+
+    def fill(self, need: int) -> None:
+        """Top the accumulator up to ``need`` bits, or to the end."""
+        buf, pos, acc, nb = self.buf, self.pos, self.acc, self.nbits
+        n = len(buf)
+        while nb < need and pos < n:
+            acc |= buf[pos] << nb
+            pos += 1
+            nb += 8
+        self.pos, self.acc, self.nbits = pos, acc, nb
+
+    def take(self, n: int) -> int:
+        if self.nbits < n:
+            self.fill(n)
+            if self.nbits < n:
+                raise ValueError("truncated bitstream")
+        v = self.acc & ((1 << n) - 1)
+        self.acc >>= n
+        self.nbits -= n
+        return v
+
+    def byte_pos(self) -> int:
+        """Drop to a byte boundary; → offset of the next unconsumed byte."""
+        drop = self.nbits & 7
+        self.acc >>= drop
+        self.nbits -= drop
+        return self.pos - self.nbits // 8
+
+    def seek_byte(self, p: int) -> None:
+        self.pos = p
+        self.acc = 0
+        self.nbits = 0
+
+
+class MsbBits:
+    """MSB-first reader over a precomputed ASCII '0'/'1' expansion:
+    ``take(n)`` (n ≥ 1) is one bytes slice plus ``int(s, 2)``, both at C
+    speed. Hot loops may read ``s`` (the expansion) and ``p`` (the bit
+    position) directly. The expansion costs 8 bytes per input byte, which
+    is fine for row-sized blobs."""
+
+    __slots__ = ("s", "p", "nbits")
+
+    def __init__(self, buf) -> None:
+        bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+        self.nbits = len(bits)
+        # padding guard: a partial Huffman read near the end may peek past
+        # it; the stream's own magics/CRCs reject any decode that used it
+        self.s = (bits + ord("0")).astype(np.uint8).tobytes() + b"0" * 64
+        self.p = 0
+
+    def take(self, n: int) -> int:
+        p = self.p
+        if p + n > self.nbits:
+            raise ValueError("truncated bitstream")
+        self.p = p + n
+        return int(self.s[p : p + n], 2)
+
+
+# ---------------------------------------------------------------------------
+# CRC32C (Castagnoli): table-driven, reflected polynomial 0x82F63B78
+# ---------------------------------------------------------------------------
+
+_CRC32C_TABLE = []
+for _i in range(256):
+    _c = _i
+    for _ in range(8):
+        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
+    _CRC32C_TABLE.append(_c)
+
+# slicing-by-8 tables: _CRC32C_SLICE[k][b] = CRC of byte b followed by k
+# zero bytes (base table = k=0). Lets the hot loop consume 8 bytes per
+# Python iteration instead of one.
+_CRC32C_SLICE = [_CRC32C_TABLE]
+for _k in range(7):
+    _prev = _CRC32C_SLICE[-1]
+    _CRC32C_SLICE.append(
+        [(_v >> 8) ^ _CRC32C_TABLE[_v & 0xFF] for _v in _prev]
+    )
+
+
+def crc32c(data: bytes, crc: int = 0) -> int:
+    crc ^= 0xFFFFFFFF
+    t0, t1, t2, t3, t4, t5, t6, t7 = _CRC32C_SLICE
+    nw = len(data) >> 3
+    if nw:
+        for w in struct.unpack_from(f"<{nw}Q", data):
+            x = w ^ crc
+            crc = (
+                t7[x & 0xFF]
+                ^ t6[(x >> 8) & 0xFF]
+                ^ t5[(x >> 16) & 0xFF]
+                ^ t4[(x >> 24) & 0xFF]
+                ^ t3[(x >> 32) & 0xFF]
+                ^ t2[(x >> 40) & 0xFF]
+                ^ t1[(x >> 48) & 0xFF]
+                ^ t0[x >> 56]
+            )
+    for b in data[nw << 3 :]:
+        crc = t0[(crc ^ b) & 0xFF] ^ (crc >> 8)
+    return crc ^ 0xFFFFFFFF
+
+
+# ---------------------------------------------------------------------------
+# vectorized (numpy) batch encoders
+# ---------------------------------------------------------------------------
 
 
 def zigzag_varint_encode(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

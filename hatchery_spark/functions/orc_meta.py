@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from hatchery_spark.functions.npwire import read_uvarint, unzigzag
+
 _COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
 _TYPE_KIND = {
     0: "BOOLEAN", 1: "BYTE", 2: "SHORT", 3: "INT", 4: "LONG", 5: "FLOAT",
@@ -41,38 +43,21 @@ _TYPE_KIND = {
 }
 
 
-def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("orc: varint overflow")
-
-
-def _zigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def parse_protobuf(buf: bytes) -> dict[int, list[Any]]:
     """Generic protobuf message → {field_number: [raw values]}; nested
     messages stay as bytes for the caller to parse."""
     out: dict[int, list[Any]] = {}
     pos = 0
     while pos < len(buf):
-        tag, pos = _uvarint(buf, pos)
+        tag, pos = read_uvarint(buf, pos)
         field, wire = tag >> 3, tag & 7
         if wire == 0:
-            v, pos = _uvarint(buf, pos)
+            v, pos = read_uvarint(buf, pos)
         elif wire == 1:
             v = int.from_bytes(buf[pos : pos + 8], "little")
             pos += 8
         elif wire == 2:
-            ln, pos = _uvarint(buf, pos)
+            ln, pos = read_uvarint(buf, pos)
             v = buf[pos : pos + ln]
             pos += ln
         elif wire == 5:
@@ -172,8 +157,8 @@ def _read_orc_tail(buf: bytes) -> dict[str, Any]:
         st: dict[str, Any] = {"num_values": _one(cm, 1)}
         if 2 in cm:  # IntStatistics
             im = parse_protobuf(cm[2][0])
-            st["min"] = _zigzag(_one(im, 1)) if 1 in im else None
-            st["max"] = _zigzag(_one(im, 2)) if 2 in im else None
+            st["min"] = unzigzag(_one(im, 1)) if 1 in im else None
+            st["max"] = unzigzag(_one(im, 2)) if 2 in im else None
         if 4 in cm:  # StringStatistics
             sm2 = parse_protobuf(cm[4][0])
             st["min"] = sm2[1][0].decode() if 1 in sm2 else None

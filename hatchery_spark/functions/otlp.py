@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hatchery_spark.functions.npwire import write_uvarint
 from hatchery_spark.functions.orc_meta import _one, parse_protobuf
 
 KIND = {"user": 3, "assistant": 2, "system": 2, "tool": 1}  # CLIENT/SERVER/INTERNAL
@@ -54,25 +55,18 @@ STATUS_OK, STATUS_ERROR = 1, 2
 
 
 def _tag(out: bytearray, field: int, wire: int) -> None:
-    _uv(out, (field << 3) | wire)
-
-
-def _uv(out: bytearray, n: int) -> None:
-    while n & ~0x7F:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
+    write_uvarint(out, (field << 3) | wire)
 
 
 def _ld(out: bytearray, field: int, payload: bytes) -> None:
     _tag(out, field, 2)
-    _uv(out, len(payload))
+    write_uvarint(out, len(payload))
     out += payload
 
 
 def _varint_field(out: bytearray, field: int, n: int) -> None:
     _tag(out, field, 0)
-    _uv(out, n)
+    write_uvarint(out, n)
 
 
 def _fixed64(out: bytearray, field: int, n: int) -> None:

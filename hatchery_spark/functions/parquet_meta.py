@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from hatchery_spark.functions.npwire import read_uvarint, unzigzag
+
 MAGIC = b"PAR1"
 
 _PARQUET_TYPES = {
@@ -68,23 +70,6 @@ _STOP, _TRUE, _FALSE, _BYTE, _I16, _I32, _I64 = 0, 1, 2, 3, 4, 5, 6
 _DOUBLE, _BINARY, _LIST, _SET, _MAP, _STRUCT = 7, 8, 9, 10, 11, 12
 
 
-def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("thrift varint overflow")
-
-
-def _zigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def _read_value(buf: bytes, pos: int, vtype: int) -> tuple[Any, int]:
     if vtype in (_TRUE, _FALSE):  # bool as a container ELEMENT is a byte
         return buf[pos] == 1, pos + 1
@@ -92,28 +77,28 @@ def _read_value(buf: bytes, pos: int, vtype: int) -> tuple[Any, int]:
         b = buf[pos]
         return b - 256 if b >= 128 else b, pos + 1
     if vtype in (_I16, _I32, _I64):
-        n, pos = _uvarint(buf, pos)
-        return _zigzag(n), pos
+        n, pos = read_uvarint(buf, pos)
+        return unzigzag(n), pos
     if vtype == _DOUBLE:
         import struct as _s
 
         return _s.unpack("<d", buf[pos : pos + 8])[0], pos + 8
     if vtype == _BINARY:
-        ln, pos = _uvarint(buf, pos)
+        ln, pos = read_uvarint(buf, pos)
         return buf[pos : pos + ln], pos + ln
     if vtype in (_LIST, _SET):
         hdr = buf[pos]
         pos += 1
         size, etype = hdr >> 4, hdr & 0x0F
         if size == 15:
-            size, pos = _uvarint(buf, pos)
+            size, pos = read_uvarint(buf, pos)
         out = []
         for _ in range(size):
             v, pos = _read_value(buf, pos, etype)
             out.append(v)
         return out, pos
     if vtype == _MAP:
-        size, pos = _uvarint(buf, pos)
+        size, pos = read_uvarint(buf, pos)
         if size == 0:
             return {}, pos
         kv = buf[pos]
@@ -142,8 +127,8 @@ def _read_struct(buf: bytes, pos: int) -> tuple[dict[int, Any], int]:
         if delta:
             fid = last_id + delta
         else:  # long form: zigzag field id follows
-            n, pos = _uvarint(buf, pos)
-            fid = _zigzag(n)
+            n, pos = read_uvarint(buf, pos)
+            fid = unzigzag(n)
         last_id = fid
         if vtype in (_TRUE, _FALSE):  # bool value lives in the header
             out[fid] = vtype == _TRUE

@@ -35,30 +35,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from hatchery_spark.functions.npwire import read_fixed, read_uvarint, write_uvarint
+
 _HASH_BITS = 12
 _HASH_MUL = 0x1E35A7BD  # the multiplicative hash snappy documents
-
-
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("varint overflow")
 
 
 def _emit_literal(out: bytearray, lit: bytes) -> None:
@@ -93,7 +73,8 @@ def _emit_copy(out: bytearray, offset: int, length: int) -> None:
 
 
 def snappy_compress(data: bytes) -> bytes:
-    out = bytearray(_varint(len(data)))
+    out = bytearray()
+    write_uvarint(out, len(data))
     n = len(data)
     if n < 4:
         _emit_literal(out, data)
@@ -142,7 +123,7 @@ def snappy_compress(data: bytes) -> bytes:
 
 
 def snappy_decompress(buf: bytes) -> bytes:
-    want, pos = _read_varint(buf, 0)
+    want, pos = read_uvarint(buf, 0)
     out = bytearray()
     n = len(buf)
     while pos < n:
@@ -152,25 +133,19 @@ def snappy_decompress(buf: bytes) -> bytes:
         if kind == 0:  # literal
             ln = tag >> 2
             if ln >= 60:
-                nb = ln - 59
-                ln = int.from_bytes(buf[pos : pos + nb], "little")
-                pos += nb
-            ln += 1
-            out += buf[pos : pos + ln]
-            pos += ln
+                raw, pos = read_fixed(buf, pos, ln - 59)
+                ln = int.from_bytes(raw, "little")
+            lit, pos = read_fixed(buf, pos, ln + 1)
+            out += lit
             continue
         if kind == 1:
             ln = ((tag >> 2) & 7) + 4
             offset = ((tag >> 5) << 8) | buf[pos]
             pos += 1
-        elif kind == 2:
+        else:  # copy-2 / copy-4: 16- or 32-bit LE offset
             ln = (tag >> 2) + 1
-            offset = int.from_bytes(buf[pos : pos + 2], "little")
-            pos += 2
-        else:
-            ln = (tag >> 2) + 1
-            offset = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
+            raw, pos = read_fixed(buf, pos, 2 if kind == 2 else 4)
+            offset = int.from_bytes(raw, "little")
         if offset == 0 or offset > len(out):
             raise ValueError("snappy: bad copy offset")
         start = len(out) - offset

@@ -1,7 +1,7 @@
 """TFRecord shard writer/reader with tf.train.Example payloads — the
 tf.data training-input format, from scratch on the repo's own primitives
-(protobuf varint/length-delimited framing as in functions/otlp.py; CRC-32C
-from functions/kafkawire.py).
+(protobuf varint/length-delimited framing as in functions/otlp.py; varints
+and CRC-32C from functions/npwire.py).
 
 Format (public TensorFlow spec, tensorflow/core/lib/io/record_writer.h):
 each record is ``uint64le length ‖ uint32le masked_crc(length bytes) ‖
@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hatchery_spark.functions.kafkawire import crc32c
+from hatchery_spark.functions.npwire import crc32c, read_uvarint, write_uvarint
 
 __all__ = [
     "masked_crc",
@@ -48,20 +48,9 @@ def masked_crc(data: bytes) -> int:
     return (((c >> 15) | (c << 17)) + _MASK_DELTA) & 0xFFFFFFFF
 
 
-def _uv(out: bytearray, n: int) -> None:
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
 def _ld(out: bytearray, field: int, payload: bytes) -> None:
-    _uv(out, (field << 3) | 2)
-    _uv(out, len(payload))
+    write_uvarint(out, (field << 3) | 2)
+    write_uvarint(out, len(payload))
     out += payload
 
 
@@ -80,7 +69,8 @@ def encode_example(features: dict[str, object]) -> bytes:
             ints = v if isinstance(v, list) else [int(v)]
             packed = bytearray()
             for x in ints:
-                _uv(packed, x & 0xFFFFFFFFFFFFFFFF)  # two's-complement 64
+                # two's-complement 64
+                write_uvarint(packed, x & 0xFFFFFFFFFFFFFFFF)
             il = bytearray()
             _ld(il, 1, bytes(packed))  # Int64List.value (packed)
             _ld(feature, 3, bytes(il))  # Feature.int64_list
@@ -93,33 +83,20 @@ def encode_example(features: dict[str, object]) -> bytes:
     return bytes(ex)
 
 
-def _rdv(buf: bytes, p: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        b = buf[p]
-        p += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, p
-        shift += 7
-        if shift > 70:
-            raise ValueError("tfrecord: varint overflow")
-
-
 def decode_example(blob: bytes) -> dict[str, object]:
     """Inverse of encode_example; accepts packed or repeated Int64List."""
 
     def _fields(buf: bytes):
         p = 0
         while p < len(buf):
-            tag, p = _rdv(buf, p)
+            tag, p = read_uvarint(buf, p)
             field, wire = tag >> 3, tag & 7
             if wire == 2:
-                ln, p = _rdv(buf, p)
+                ln, p = read_uvarint(buf, p)
                 yield field, buf[p : p + ln]
                 p += ln
             elif wire == 0:
-                v, p = _rdv(buf, p)
+                v, p = read_uvarint(buf, p)
                 yield field, v
             else:
                 raise ValueError(f"tfrecord: unsupported wire type {wire}")
@@ -153,7 +130,7 @@ def decode_example(blob: bytes) -> dict[str, object]:
                         else:  # packed form
                             p = 0
                             while p < len(iv):
-                                x, p = _rdv(iv, p)
+                                x, p = read_uvarint(iv, p)
                                 ints.append(x)
                     signed = [
                         x - (1 << 64) if x >= (1 << 63) else x for x in ints

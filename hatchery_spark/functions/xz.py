@@ -16,10 +16,13 @@ Scale shape: blobs are rows; decode is one zero-shuffle Arrow pass.
 
 from __future__ import annotations
 
+import zlib
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from hatchery_spark.functions.npwire import read_uvarint
 
 __all__ = ["unxz", "xz_decode_col"]
 
@@ -41,27 +44,6 @@ def _crc64(data: bytes, crc: int = 0) -> int:
     for b in data:
         crc = (crc >> 8) ^ _CRC64_TABLE[(crc ^ b) & 0xFF]
     return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-def _crc32(data: bytes) -> int:
-    import zlib
-
-    return zlib.crc32(data) & 0xFFFFFFFF
-
-
-def _mbint(buf: bytes, p: int) -> tuple[int, int]:
-    """xz multibyte integer (7 bits per byte, little-endian, high bit =
-    continuation)."""
-    v = shift = 0
-    while True:
-        b = buf[p]
-        p += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, p
-        shift += 7
-        if shift > 63:
-            raise ValueError("xz: multibyte integer overflow")
 
 
 # ------------------------------------------------------------ LZMA core
@@ -328,7 +310,7 @@ def unxz(blob: bytes) -> bytes:
     if len(blob) < 12 or blob[:6] != _XZ_MAGIC:
         raise ValueError("xz: bad stream header magic")
     flags = blob[6:8]
-    if _crc32(flags) != int.from_bytes(blob[8:12], "little"):
+    if zlib.crc32(flags) != int.from_bytes(blob[8:12], "little"):
         raise ValueError("xz: stream header CRC mismatch")
     if flags[0] != 0:
         raise ValueError("xz: bad stream flags")
@@ -343,7 +325,7 @@ def unxz(blob: bytes) -> bytes:
             break
         hdr_size = (first + 1) * 4
         hdr = blob[p : p + hdr_size]
-        if _crc32(hdr[:-4]) != int.from_bytes(hdr[-4:], "little"):
+        if zlib.crc32(hdr[:-4]) != int.from_bytes(hdr[-4:], "little"):
             raise ValueError("xz: block header CRC mismatch")
         bflags = hdr[1]
         n_filters = (bflags & 3) + 1
@@ -352,13 +334,13 @@ def unxz(blob: bytes) -> bytes:
         q = 2
         packed_size = unpacked_size = None
         if has_packed:
-            packed_size, q = _mbint(hdr, q)
+            packed_size, q = read_uvarint(hdr, q)
         if has_unpacked:
-            unpacked_size, q = _mbint(hdr, q)
+            unpacked_size, q = read_uvarint(hdr, q)
         filt_id = None
         for _ in range(n_filters):
-            fid, q = _mbint(hdr, q)
-            plen, q = _mbint(hdr, q)
+            fid, q = read_uvarint(hdr, q)
+            plen, q = read_uvarint(hdr, q)
             filt_id = fid
             q += plen
         if filt_id != 0x21:
@@ -376,7 +358,7 @@ def unxz(blob: bytes) -> bytes:
         if check_type == 0:
             pass
         elif check_type == 1:
-            if int.from_bytes(blob[p : p + 4], "little") != _crc32(data):
+            if int.from_bytes(blob[p : p + 4], "little") != zlib.crc32(data):
                 raise ValueError("xz: block CRC32 mismatch")
             p += 4
         elif check_type == 4:
@@ -398,19 +380,19 @@ def unxz(blob: bytes) -> bytes:
         out += data
     # index: indicator already seen at blob[p] == 0
     q = p + 1
-    nrec, q = _mbint(blob, q)
+    nrec, q = read_uvarint(blob, q)
     for _ in range(nrec):
-        _, q = _mbint(blob, q)  # unpadded size
-        _, q = _mbint(blob, q)  # uncompressed size
+        _, q = read_uvarint(blob, q)  # unpadded size
+        _, q = read_uvarint(blob, q)  # uncompressed size
     while q % 4:
         q += 1
-    if _crc32(blob[p:q]) != int.from_bytes(blob[q : q + 4], "little"):
+    if zlib.crc32(blob[p:q]) != int.from_bytes(blob[q : q + 4], "little"):
         raise ValueError("xz: index CRC mismatch")
     q += 4
     footer = blob[q : q + 12]
     if len(footer) != 12 or footer[10:12] != _FOOTER_MAGIC:
         raise ValueError("xz: bad stream footer")
-    if _crc32(footer[4:10]) != int.from_bytes(footer[0:4], "little"):
+    if zlib.crc32(footer[4:10]) != int.from_bytes(footer[0:4], "little"):
         raise ValueError("xz: footer CRC mismatch")
     return bytes(out)
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import struct
 
+from hatchery_spark.functions.npwire import LsbBits, read_fixed
+
 ZSTD_MAGIC = 0xFD2FB528
 
 # --- xxh64 (content checksum) -------------------------------------------
@@ -122,33 +124,12 @@ class BackBits:
         return (self.val >> self.pos) & ((1 << n) - 1)
 
 
-class FwdBits:
-    """LSB-first forward bitstream (FSE table descriptions)."""
-
-    __slots__ = ("buf", "bitpos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.bitpos = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.buf[(self.bitpos + i) >> 3]
-            v |= ((byte >> ((self.bitpos + i) & 7)) & 1) << i
-        self.bitpos += n
-        return v
-
-    def bytes_used(self) -> int:
-        return (self.bitpos + 7) >> 3
-
-
 # --- FSE -----------------------------------------------------------------
 
 
-def fse_read_ncount(bits: FwdBits, max_symbol: int) -> tuple[list[int], int]:
+def fse_read_ncount(bits: LsbBits, max_symbol: int) -> tuple[list[int], int]:
     """RFC 4.1.1: (normalized counts incl. -1 probs, accuracy_log)."""
-    accuracy_log = bits.read(4) + 5
+    accuracy_log = bits.take(4) + 5
     if accuracy_log > 9:
         raise ValueError("zstd: FSE accuracy log too large")
     remaining = (1 << accuracy_log) + 1
@@ -159,7 +140,7 @@ def fse_read_ncount(bits: FwdBits, max_symbol: int) -> tuple[list[int], int]:
     while remaining > 1 and len(counts) <= max_symbol:
         if previous0:
             while True:  # 2-bit zero-run flags
-                rep = bits.read(2)
+                rep = bits.take(2)
                 counts.extend([0] * rep)
                 if rep != 3:
                     break
@@ -168,11 +149,11 @@ def fse_read_ncount(bits: FwdBits, max_symbol: int) -> tuple[list[int], int]:
                 raise ValueError("zstd: FSE zero run overflow")
             continue
         maxv = 2 * threshold - 1 - remaining
-        low = bits.read(nbbits - 1)
+        low = bits.take(nbbits - 1)
         if low < maxv:
             value = low
         else:
-            extra = bits.read(1)
+            extra = bits.take(1)
             value = low + (extra << (nbbits - 1))
             if value >= threshold:
                 value -= maxv
@@ -289,12 +270,12 @@ def read_huffman_table(buf: bytes, pos: int):
     else:  # FSE-compressed weights, two alternating states
         comp = buf[pos : pos + header]
         pos += header
-        fwd = FwdBits(comp)
+        fwd = LsbBits(comp)
         counts, log = fse_read_ncount(fwd, 255)
         if log > 6:
             raise ValueError("zstd: Huffman-weight FSE accuracy too large")
         table = fse_build_dtable(counts, log)
-        stream = comp[fwd.bytes_used() :]
+        stream = comp[fwd.byte_pos() :]
         bits = BackBits(stream)
         s1 = FseState(table, log, bits)
         s2 = FseState(table, log, bits)
@@ -389,9 +370,10 @@ def _read_seq_table(buf, pos, mode, defaults, max_symbol, ctx_slot, ctx):
         sym = buf[pos]
         return (fse_rle_table(sym), 0), pos + 1
     if mode == 2:  # FSE-described
-        fwd = FwdBits(buf[pos:])
+        fwd = LsbBits(buf)
+        fwd.seek_byte(pos)
         counts, log = fse_read_ncount(fwd, max_symbol)
-        return (fse_build_dtable(counts, log), log), pos + fwd.bytes_used()
+        return (fse_build_dtable(counts, log), log), fwd.byte_pos()
     prev = getattr(ctx, ctx_slot)
     if prev is None:
         raise ValueError("zstd: repeat mode with no previous table")
@@ -597,25 +579,24 @@ def _zstd_decompress(buf: bytes) -> bytes:
     fcs = None
     fcs_size = (1 if single else 0, 2, 4, 8)[fcs_flag]
     if fcs_size:
-        fcs = int.from_bytes(buf[pos : pos + fcs_size], "little")
+        raw, pos = read_fixed(buf, pos, fcs_size)
+        fcs = int.from_bytes(raw, "little")
         if fcs_size == 2:
             fcs += 256
-        pos += fcs_size
     out = bytearray()
     ctx = _SeqTables()
     while True:
-        hdr = int.from_bytes(buf[pos : pos + 3], "little")
-        pos += 3
+        raw, pos = read_fixed(buf, pos, 3)
+        hdr = int.from_bytes(raw, "little")
         last, btype, bsize = hdr & 1, (hdr >> 1) & 3, hdr >> 3
         if btype == 0:  # raw
-            out += buf[pos : pos + bsize]
-            pos += bsize
+            raw, pos = read_fixed(buf, pos, bsize)
+            out += raw
         elif btype == 1:  # RLE
-            out += bytes([buf[pos]]) * bsize
-            pos += 1
+            raw, pos = read_fixed(buf, pos, 1)
+            out += raw * bsize
         elif btype == 2:
-            block = buf[pos : pos + bsize]
-            pos += bsize
+            block, pos = read_fixed(buf, pos, bsize)
             lit, lpos = _decode_literals(block, 0, ctx)
             nseq, bits, _ = _decode_sequences(block, lpos, ctx)
             _execute_sequences(nseq, bits, lit, ctx, out)
@@ -624,10 +605,9 @@ def _zstd_decompress(buf: bytes) -> bytes:
         if last:
             break
     if checksum:
-        (want,) = struct.unpack_from("<I", buf, pos)
-        if xxh64(bytes(out)) & 0xFFFFFFFF != want:
+        raw, pos = read_fixed(buf, pos, 4)
+        if xxh64(bytes(out)) & 0xFFFFFFFF != int.from_bytes(raw, "little"):
             raise ValueError("zstd: content checksum mismatch")
-        pos += 4
     if fcs is not None and fcs != len(out):
         raise ValueError("zstd: content size mismatch")
     return bytes(out)

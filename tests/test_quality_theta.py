@@ -114,11 +114,12 @@ def test_tfrecord_example_proto_forms():
         "doc_id": 42, "text": b"hello", "neg": -7, "lst": [1, 300, 1 << 40]
     }
     # repeated (non-packed) Int64List must also parse: build one by hand
-    from hatchery_spark.functions.tfrecord import _ld, _uv
+    from hatchery_spark.functions.npwire import write_uvarint
+    from hatchery_spark.functions.tfrecord import _ld
 
     il = bytearray()
-    _uv(il, (1 << 3) | 0); _uv(il, 5)
-    _uv(il, (1 << 3) | 0); _uv(il, 6)
+    write_uvarint(il, (1 << 3) | 0); write_uvarint(il, 5)
+    write_uvarint(il, (1 << 3) | 0); write_uvarint(il, 6)
     feature = bytearray(); _ld(feature, 3, bytes(il))
     entry = bytearray(); _ld(entry, 1, b"xs"); _ld(entry, 2, bytes(feature))
     feats = bytearray(); _ld(feats, 1, bytes(entry))

@@ -102,8 +102,8 @@ def test_fse_primitives_pinned_against_libzstd():
     """ncount parse and DTable build cell-for-cell vs libzstd itself."""
     import ctypes
 
+    from hatchery_spark.functions.npwire import LsbBits
     from hatchery_spark.functions.zstd_dec import (
-        FwdBits,
         fse_build_dtable,
         fse_read_ncount,
     )
@@ -114,7 +114,7 @@ def test_fse_primitives_pinned_against_libzstd():
 
     # ncount bytes harvested from a real frame (SURVEY.md, level 1 LL table)
     tb = bytes.fromhex("048aa6c3c3a3738144208f654910c559c7a0bbda0053")
-    fwd = FwdBits(tb)
+    fwd = LsbBits(tb)
     counts, log = fse_read_ncount(fwd, 35)
     norm = (ctypes.c_short * 256)()
     maxsv = ctypes.c_uint(255)
@@ -123,7 +123,7 @@ def test_fse_primitives_pinned_against_libzstd():
         norm, ctypes.byref(maxsv), ctypes.byref(tlog), tb,
         ctypes.c_size_t(len(tb)),
     )
-    assert used == fwd.bytes_used()
+    assert used == fwd.byte_pos()
     assert tlog.value == log
     assert [norm[i] for i in range(maxsv.value + 1)] == counts
 
