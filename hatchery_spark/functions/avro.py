@@ -401,12 +401,11 @@ def _avro_schema_for(df: DataFrame, name: str = "row") -> dict:
 
 def _encode_columns_fast(
     schema: dict, pdf: pd.DataFrame, ts_cols: set[str]
-) -> "tuple[bytes, Any] | None":
+) -> "tuple[bytes, Any]":
     """Vectorized encoder for the flat ``["null", primitive]`` record shape
     ``_avro_schema_for`` emits. Returns (flat encoded bytes, per-record
-    byte-length array) — byte-identical to the per-record reference
-    encoder (pytest-pinned) — or None when a field shape is outside the
-    fast path (caller falls back to the reference loop)."""
+    byte-length array), byte-identical to the per-record reference encoder
+    `write_ocf` (pytest-pinned)."""
     import numpy as np
 
     from hatchery_spark.functions.npwire import rowcat, zigzag_varint_encode
@@ -414,12 +413,7 @@ def _encode_columns_fast(
     n = len(pdf)
     pieces: list[tuple[np.ndarray, np.ndarray]] = []
     for f in schema["fields"]:
-        ft = f["type"]
-        if not (
-            isinstance(ft, list) and len(ft) == 2 and ft[0] == "null"
-        ):
-            return None
-        branch = ft[1]
+        branch = f["type"][1]
         t = branch["type"] if isinstance(branch, dict) else branch
         col = pdf[f["name"]]
         null = col.isna().to_numpy()
@@ -433,9 +427,7 @@ def _encode_columns_fast(
             if f["name"] in ts_cols:
                 vals = col.to_numpy(dtype="datetime64[ns]").view("i8")[live] // 1000
             else:
-                vals = col.to_numpy(dtype="float64", na_value=0.0)[live].astype(
-                    np.int64
-                ) if null.any() else col.to_numpy().astype(np.int64)[live]
+                vals = col[live].to_numpy(dtype=np.int64)
             flat, vlens = zigzag_varint_encode(vals)
             lens[live] = vlens
         elif t in ("double", "float"):
@@ -463,7 +455,7 @@ def _encode_columns_fast(
             flat = np.frombuffer(b"".join(raw), dtype=np.uint8)
             lens[live] = blens
         else:
-            return None
+            raise ValueError(f"no vectorized Avro encoding for type {t}")
         pieces.append((flat, lens))
     out, rec_lens = rowcat(pieces)
     return out.tobytes(), rec_lens
@@ -490,31 +482,16 @@ def write_avro_files(
         fid = int(pdf.file_id.iloc[0])
         pdf = pdf.sort_values(order_col)
         codec = "deflate" if fid % 2 == 0 else "null"
-        fast = _encode_columns_fast(schema, pdf[cols], ts_cols)
-        if fast is not None:
-            buf, rec_lens = fast
-            bounds = np.concatenate([[0], np.cumsum(rec_lens)])
-            blocks = [
-                (
-                    min(i + 500, len(rec_lens)) - i,
-                    buf[bounds[i] : bounds[min(i + 500, len(rec_lens))]],
-                )
-                for i in range(0, len(rec_lens), 500)
-            ]
-            content = _write_ocf_frames(schema, blocks, codec, None)
-        else:  # reference per-record path (non-flat or exotic field types)
-            records = []
-            for row in pdf[cols].itertuples(index=False, name=None):
-                rec = {}
-                for c, v in zip(cols, row):
-                    if pd.isna(v):
-                        rec[c] = None
-                    elif c in ts_cols:
-                        rec[c] = int(pd.Timestamp(v).value // 1000)  # micros
-                    else:
-                        rec[c] = v
-                records.append(rec)
-            content = write_ocf(schema, records, codec=codec)
+        buf, rec_lens = _encode_columns_fast(schema, pdf[cols], ts_cols)
+        bounds = np.concatenate([[0], np.cumsum(rec_lens)])
+        blocks = [
+            (
+                min(i + 500, len(rec_lens)) - i,
+                buf[bounds[i] : bounds[min(i + 500, len(rec_lens))]],
+            )
+            for i in range(0, len(rec_lens), 500)
+        ]
+        content = _write_ocf_frames(schema, blocks, codec, None)
         return pd.DataFrame({"file_id": [fid], "content": [content]})
 
     return recs.groupBy("file_id").applyInPandas(

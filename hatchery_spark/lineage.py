@@ -6,7 +6,8 @@ deleted only AFTER every file it names has been written to the sink
 of work is (run_ts, route_id): a manifest entry is committed only after that
 route's sink write action returns, so a crashed run re-executes exactly the
 uncommitted routes and a completed run is a no-op — idempotent because each
-route's write is mode("overwrite") into its own sink directory.
+route's write replaces only its own run_ts partitions (sinks.overwrite_partitions).
+A manifest file that cannot be read counts as uncommitted.
 
 Lineage metrics are collected DISTRIBUTED-SIDE with a mapInPandas pass that emits
 one summary row per physical partition (partition_id, row_count, key min/max) —
@@ -104,12 +105,23 @@ class ManifestStore:
 
         return os.path.join(self.root, f"{safe_run_ts(run_ts)}__{route_id}.json")
 
+    def _read(self, path: str) -> RouteRunRecord | None:
+        """The record at `path`, or None if it is missing or unreadable.
+
+        A torn or truncated manifest file (a crash outside `commit`'s
+        tmp + rename, a damaged disk) reads as uncommitted, so resume re-runs
+        that route — its sink write replaces its own partitions — instead of
+        failing every later tick on a parse error.
+        """
+        try:
+            with open(path) as f:
+                return RouteRunRecord(**json.load(f))
+        except (FileNotFoundError, ValueError, TypeError):
+            return None
+
     def is_committed(self, run_ts: str, route_id: str) -> bool:
-        p = self._path(run_ts, route_id)
-        if not os.path.exists(p):
-            return False
-        with open(p) as f:
-            return bool(json.load(f).get("committed"))
+        rec = self._read(self._path(run_ts, route_id))
+        return rec is not None and bool(rec.committed)
 
     def commit(self, record: RouteRunRecord) -> None:
         """Atomic write (tmp + rename) AFTER the sink write succeeded."""
@@ -120,17 +132,13 @@ class ManifestStore:
         os.replace(tmp, p)
 
     def load(self, run_ts: str, route_id: str) -> RouteRunRecord | None:
-        p = self._path(run_ts, route_id)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            d = json.load(f)
-        return RouteRunRecord(**d)
+        return self._read(self._path(run_ts, route_id))
 
     def all_records(self) -> list[RouteRunRecord]:
-        out = []
-        for name in sorted(os.listdir(self.root)):
-            if name.endswith(".json"):
-                with open(os.path.join(self.root, name)) as f:
-                    out.append(RouteRunRecord(**json.load(f)))
-        return out
+        """Every readable record, in file-name order."""
+        recs = (
+            self._read(os.path.join(self.root, name))
+            for name in sorted(os.listdir(self.root))
+            if name.endswith(".json")
+        )
+        return [r for r in recs if r is not None]

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hatchery_spark.config import RouteConfig
+from hatchery_spark.sinks import overwrite_partitions
 
 # Salt bucket count for splitting whale conversations across write tasks.
 DEFAULT_SALT_BUCKETS = 8
@@ -149,10 +150,10 @@ def write_route_frame(
     reference's accumulate-one-object-per-poll semantics
     (/root/reference/destination/gcs/client.go:31-54): every tick of the CLI
     loop lands in its OWN run_ts partition, so repeated runs into a shared sink
-    accumulate instead of clobbering. Overwrite is scoped to this run's
-    partitions only (dynamic partitionOverwriteMode), which keeps a crashed
-    run's re-execution idempotent at (run_ts, route) granularity — exactly the
-    manifest's unit of commit.
+    accumulate instead of clobbering. The write is sinks.overwrite_partitions,
+    scoped to this run's partitions, which keeps a crashed run's re-execution
+    idempotent at (run_ts, route) granularity — exactly the manifest's unit of
+    commit.
 
     The row count rides on the write action itself via df.observe() — no
     second pass over the data to count what was written.
@@ -180,12 +181,7 @@ def write_route_frame(
         else:
             value = yaml_lines(out)
         out = out.select(value.alias("value"), "run_ts", "dt")
-    writer = (
-        out.write.mode("overwrite")
-        # replace only the partitions THIS run produces, never siblings
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_ts", "dt")
-    )
+    writer = overwrite_partitions(out, "run_ts", "dt")
     if route.sink_format == "json":
         writer.option("compression", "gzip").json(sink)
     elif route.sink_format == "log":

@@ -10,14 +10,43 @@ commit protocol, not the data layout.
 The reference analog is the Destination factory
 (/root/reference/types.go:14) — one writer implementation per storage backend
 behind one interface.
+
+Every idempotent sink write in the package — batch route sinks
+(run_ts=/dt=), streaming micro-batch sinks (batch_id=/dt=), the versioned
+dedup/ANN stores (bucket=|cell=/v=) and partition upserts — goes through
+`overwrite_partitions`: a re-run or replay replaces exactly the partitions
+it produces and leaves every sibling partition as it was.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+
+def overwrite_partitions(df: DataFrame, *cols: str) -> DataFrameWriter:
+    """Writer for `df` partitioned by `cols` that overwrites only the
+    partitions present in `df` (dynamic partition overwrite).
+
+    This is the replay contract of every idempotent write: a unit of work
+    (a batch tick's run_ts, a micro-batch's batch_id, a store delta's v)
+    owns its partition values, so writing it again — after a crash, or a
+    foreachBatch replay with the same batch_id — replaces its own files
+    and never duplicates rows or touches sibling partitions. Acknowledging
+    the unit only after the write returns (manifest commit, streaming
+    checkpoint) then gives exactly-once output, the reference's
+    ack-after-write (source/falcon_data_replicator/client.go:217-224).
+    A partition the re-run no longer produces is left
+    in place; callers that can empty one delete it themselves
+    (`upsert_partitioned`).
+    """
+    return (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+    )
 
 
 class IcebergUnavailable(RuntimeError):
@@ -404,12 +433,7 @@ def upsert_partitioned(
         return []
     base = spark.read.parquet(path).filter(F.col(part_col).isin(touched))
     merged = merge_frames(base, updates, key_col, delete_col=delete_col).localCheckpoint()
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .parquet(path)
-    )
+    overwrite_partitions(merged, part_col).parquet(path)
     # Dynamic overwrite only replaces partitions PRESENT in the written
     # output — a touched partition whose every row was deleted produces no
     # output partition, so its old files would survive and the "deleted"

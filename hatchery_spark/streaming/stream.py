@@ -1,25 +1,37 @@
-"""Structured Streaming mode: the same stage functions under readStream.
+"""Structured Streaming mode: the batch stage functions under readStream.
 
 The reference is a cron-batch puller (docs/usage.md; tick loop
 /root/reference/pkg/config/range.go:62-75), so batch is the primary mode; this
-module gives the streaming equivalent with identical stage semantics:
+module runs the same parse/enrich/route code once per micro-batch:
 
-  readStream(transcripts dir) → parse → enrich → foreachBatch fan-out
-                                         (one filtered write per route per batch)
+  readStream(input dir) → foreachBatch(writer) → availableNow drain
 
-  * checkpointing: Spark's offset/commit log per query — the streaming analog
-    of the manifest store's ack-after-write (delete-after-write,
-    /root/reference/source/falcon_data_replicator/client.go:217-224).
-  * trigger(availableNow=True) = catch-up batch parity (one run drains all
-    available input then stops) — the streaming analog of a single tick.
-  * watermark + tumbling window for per-window sink counts (late-data-safe).
+Every stream here is built from three shared pieces:
 
-Batch and streaming share parse/enrich/route code; only the sink loop differs.
+  * one drain (`_read_stream` + `_drain`): a schema'd file-source stream
+    under a checkpointed foreachBatch query. trigger(availableNow=True)
+    drains everything available and stops — the streaming analog of one
+    tick. Spark's offset/commit log is the ack: a batch is committed only
+    after its writer returns, and an uncommitted batch is replayed with the
+    same batch_id (the reference's ack-after-write,
+    source/falcon_data_replicator/client.go:217-224).
+  * one write contract (`sinks.overwrite_partitions`, the batch router's
+    write): sinks are partitioned by batch_id and delta stores by v=<batch_id>,
+    so a replay rewrites exactly its own partitions. The HLL and MG stores
+    write a whole v=<batch_id>/ snapshot; the CDC writer commits through
+    snapshot.SnapshotTable's txn map instead.
+  * one versioned-store probe (`_store_versions`): committed versions are
+    globbed on the store's Hadoop FileSystem, so a plain path and a URI name
+    the same store, and a replay of batch b reads only versions v < b — the
+    history it saw the first time.
+
+Watermarked windows, sessions and stream-stream joins keep state bounded for
+queries that run indefinitely.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,40 +42,93 @@ from hatchery_spark.enrich import enrich_turns
 from hatchery_spark.parse import parse_turns
 from hatchery_spark.router import route_matches
 from hatchery_spark.pipeline import TRANSCRIPT_COLUMNS
+from hatchery_spark.sinks import overwrite_partitions
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
 
 
-def read_transcripts_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+def _read_stream(
+    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int | None
 ) -> DataFrame:
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
 
 
+def _drain(
+    stream: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    processing_time: str | None = None,
+):
+    """Run `write_batch` over each micro-batch of `stream`, checkpointed in
+    `checkpoint_dir`. With no `processing_time`, drain everything available
+    (availableNow), wait, and return the stopped query; otherwise return the
+    query running on that processing-time trigger."""
+    writer = (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if processing_time is not None:
+        return writer.trigger(processingTime=processing_time).start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def _store_versions(
+    spark: SparkSession, store_dir: str, committed_glob: str
+) -> list[int]:
+    """Sorted versions <n> of the committed files matching
+    `store_dir/<committed_glob>`, each of which sits in a v=<n>/ directory.
+
+    The glob runs on the store's Hadoop FileSystem, so a plain path and a URI
+    (file://, s3a://, …) name the same store. Only committed files count: a
+    crash mid-write leaves _temporary/ or a v= directory without _SUCCESS,
+    and that must read as no version, not wedge every replay on a partial
+    read.
+    """
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    fs = hadoop.Path(store_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    statuses = fs.globStatus(hadoop.Path(f"{store_dir}/{committed_glob}")) or []
+    return sorted(
+        {int(st.getPath().getParent().getName().split("=", 1)[1]) for st in statuses}
+    )
+
+
+def _latest_snapshot(
+    spark: SparkSession, store_dir: str, before: int | None = None
+) -> DataFrame | None:
+    """Latest complete snapshot store_dir/v=<n>/ (one with _SUCCESS) with
+    n < `before`, or None. A replay of batch b must merge against the pre-b
+    state, not its own output."""
+    versions = [
+        v for v in _store_versions(spark, store_dir, "v=*/_SUCCESS")
+        if before is None or v < before
+    ]
+    return spark.read.parquet(f"{store_dir}/v={versions[-1]}") if versions else None
+
+
+def read_transcripts_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    return _read_stream(spark, path, TRANSCRIPT_DDL, max_files_per_trigger)
+
+
 def route_fanout_batch_writer(
     routes: Sequence[RouteConfig], out_dir: str, catalog: DataFrame
 ):
-    """foreachBatch function: parse → enrich → per-route idempotent write.
+    """foreachBatch function: parse → enrich → one write per route into
+    <out_dir>/<route_id>/batch_id=<b>/dt=YYYY-MM-DD/.
 
     Runs per micro-batch on the driver; each route's write is an independent
-    action over the persisted batch (same shape as the batch router).
-
-    foreachBatch is only at-least-once: if the driver dies after route 1 of 3,
-    the restarted query REPLAYS the whole batch with the SAME batch_id, and a
-    plain append would duplicate route 1's rows. Exactly-once is recovered the
-    same way the batch router does it (router.py write_route_frame): every sink
-    is partitioned by batch_id and written with mode=overwrite under DYNAMIC
-    partitionOverwriteMode, so a replay replaces exactly its own batch_id
-    partition — sibling batches untouched, duplicates impossible. This is the
-    streaming analog of the reference's ack-after-write contract
-    (/root/reference/source/falcon_data_replicator/client.go:217-224): the
-    checkpoint commit (ack) happens only after every route's write landed, and
-    an un-acked batch can be re-delivered safely.
+    action over the persisted batch (same shape as the batch router). If the
+    driver dies after route 1 of 3, the restarted query replays the whole
+    batch with the same batch_id, and `overwrite_partitions` makes the replay
+    replace route 1's batch_id partition instead of duplicating its rows.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -71,15 +136,13 @@ def route_fanout_batch_writer(
         enriched.persist()
         try:
             for route in routes:
-                (
+                tagged = (
                     route_matches(enriched, route)
                     .withColumn("dt", F.to_date("ts"))
                     .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    # replace only THIS batch's partition on replay
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id", "dt")
-                    .parquet(f"{out_dir}/{route.route_id}")
+                )
+                overwrite_partitions(tagged, "batch_id", "dt").parquet(
+                    f"{out_dir}/{route.route_id}"
                 )
         finally:
             enriched.unpersist()
@@ -102,17 +165,14 @@ def run_streaming_pipeline(
     validate_routes(routes)
     if catalog is None:
         catalog = service_catalog_df(spark)
-    stream = read_transcripts_stream(spark, input_path, max_files_per_trigger)
-    writer = (
-        stream.select(*TRANSCRIPT_COLUMNS)
-        .writeStream.foreachBatch(route_fanout_batch_writer(routes, out_dir, catalog))
-        .option("checkpointLocation", checkpoint_dir)
+    return _drain(
+        read_transcripts_stream(spark, input_path, max_files_per_trigger).select(
+            *TRANSCRIPT_COLUMNS
+        ),
+        route_fanout_batch_writer(routes, out_dir, catalog),
+        checkpoint_dir,
+        None if available_now else processing_time,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=processing_time).start()
 
 
 def dedup_stream(
@@ -179,25 +239,55 @@ def _bucketed_digests(df: DataFrame, text_col: str, n_buckets: int) -> DataFrame
 
 
 def has_committed_store(spark: SparkSession, store_dir: str) -> bool:
-    """True iff the digest store holds at least one COMMITTED parquet file.
+    """True iff the delta store (bucket=/v=) holds at least one COMMITTED
+    part file.
 
     Bare-directory existence is not enough: a crash during the very first
-    store write can leave store_dir containing only _temporary/, and a
-    naive exists() check would then try to read an empty store and wedge
-    every replay. Globbing for part files inside committed bucket=/v=
-    partitions distinguishes that state — no committed files means the
-    empty-history fallback is genuinely safe. Any OTHER read error
+    store write can leave store_dir containing only _temporary/, and reading
+    that empty store would wedge every replay. No committed part file means
+    the empty-history fallback is genuinely safe. Any OTHER read error
     (transient FS failure, corrupt footer, permissions) still fails the
     batch and retries rather than silently dropping history.
     """
-    glob = spark._jvm.org.apache.hadoop.fs.Path(
-        store_dir + "/bucket=*/v=*/part-*"
+    return bool(_store_versions(spark, store_dir, "bucket=*/v=*/part-*"))
+
+
+def _pruned_history(
+    spark: SparkSession, store_dir: str, batch_rows: DataFrame, batch_id: int
+) -> DataFrame:
+    """Delta-store rows that can meet this batch: versions v < batch_id (a
+    replay never sees its own half-written delta) in the buckets
+    `batch_rows` touches. Both filters are directory-level PartitionFilters,
+    so untouched buckets and later deltas are never read; the distinct-bucket
+    collect is ≤ n_buckets ints."""
+    buckets = [r[0] for r in batch_rows.select("bucket").distinct().collect()]
+    return (
+        spark.read.parquet(store_dir)
+        .filter(F.col("v") < F.lit(batch_id))
+        .filter(F.col("bucket").isin(buckets))
     )
-    fs = spark._jvm.org.apache.hadoop.fs.Path(store_dir).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    statuses = fs.globStatus(glob)
-    return statuses is not None and len(statuses) > 0
+
+
+def _land_batch(
+    novel: DataFrame,
+    batch_id: int,
+    sink_dir: str,
+    store_rows: Callable[[DataFrame], DataFrame],
+    store_dir: str,
+) -> None:
+    """Write a dedup batch: `novel` to sink_dir/batch_id=<b>/ and
+    `store_rows(novel)` to store_dir/bucket=<k>/v=<b>/. `novel` is persisted
+    across both writes so its dedup plan runs once."""
+    novel.persist()
+    try:
+        overwrite_partitions(
+            novel.withColumn("batch_id", F.lit(batch_id)), "batch_id"
+        ).parquet(sink_dir)
+        overwrite_partitions(
+            store_rows(novel).withColumn("v", F.lit(batch_id)), "bucket", "v"
+        ).parquet(store_dir)
+    finally:
+        novel.unpersist()
 
 
 def pruned_history_digests(
@@ -211,10 +301,7 @@ def pruned_history_digests(
 
     Two prunes compose:
       * partition prune — the store is laid out bucket=<pmod(xxhash64,B)>/v=,
-        and the scan filters bucket ∈ (this batch's buckets) ∧ v < batch_id;
-        both are directory-level PartitionFilters, so untouched buckets and
-        future/own deltas are never read. (The distinct-bucket collect is
-        ≤ n_buckets ints — bounded by construction.)
+        and `_pruned_history` reads only this batch's buckets at v < batch_id.
       * broadcast semi-join — the (small) batch digest frame is the BUILD
         side and history the streamed probe side, so the full digest history
         is never sorted or exchanged. A plain `batch LEFT ANTI history`
@@ -226,12 +313,7 @@ def pruned_history_digests(
     join build side in the writer. Replays are deterministic: v < batch_id
     excludes the replaying batch's own half-written delta.
     """
-    buckets = [r[0] for r in batch_digests.select("bucket").distinct().collect()]
-    history = (
-        spark.read.parquet(store_dir)
-        .filter(F.col("v") < F.lit(batch_id))
-        .filter(F.col("bucket").isin(buckets))
-    )
+    history = _pruned_history(spark, store_dir, batch_digests, batch_id)
     return history.join(
         F.broadcast(batch_digests.select("bucket", "_digest")),
         on=["bucket", "_digest"],
@@ -259,9 +341,8 @@ def incremental_dedup_writer(
         exactly the history it saw the first time (its own half-written
         digests are excluded, not double-counted).
       * both the novel-docs sink and the digest delta are partitioned by
-        batch_id/v and written with DYNAMIC partition overwrite — a replay
-        replaces its own partitions byte-for-byte (same contract as
-        route_fanout_batch_writer).
+        batch_id/v and written with `overwrite_partitions` — a replay
+        replaces its own partitions byte-for-byte.
 
     Per-batch cost is O(novel + matched-bucket digest scan), never a full-
     history shuffle: the history side is partition-pruned and broadcast-semi-
@@ -274,49 +355,26 @@ def incremental_dedup_writer(
     (/root/reference/source/falcon_data_replicator/client.go:217-224)."""
     from hatchery_spark.functions.dedup import digest_store, incremental_exact_dedup
 
+    def _digests(df: DataFrame) -> DataFrame:
+        return _bucketed_digests(df, text_col, n_buckets)
+
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if has_committed_store(spark, store_dir):
-            batch_digests = _bucketed_digests(batch_df, text_col, n_buckets)
-            batch_digests.persist()
-            try:
-                seen = pruned_history_digests(
-                    spark, store_dir, batch_digests, batch_id
-                )
-                # seen ≤ |batch digests| rows → broadcast the anti-join build side
-                novel, _ = incremental_exact_dedup(
-                    batch_df, F.broadcast(seen), text_col, id_col
-                )
-                _write_novel(novel, batch_id)
-            finally:
-                batch_digests.unpersist()
-        else:  # first batch: no committed history yet
-            empty_seen = digest_store(batch_df.limit(0), text_col)
-            novel, _ = incremental_exact_dedup(
-                batch_df, empty_seen, text_col, id_col
-            )
-            _write_novel(novel, batch_id)
-
-    def _write_novel(novel: DataFrame, batch_id: int) -> None:
-        novel.persist()
+        batch_digests = None
         try:
-            (
-                novel.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(sink_dir)
-            )
-            (
-                _bucketed_digests(novel, text_col, n_buckets)
-                .withColumn("v", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket", "v")
-                .parquet(store_dir)
-            )
+            if has_committed_store(spark, store_dir):
+                batch_digests = _digests(batch_df).persist()
+                # seen ≤ |batch digests| rows → broadcast the anti-join build side
+                seen = F.broadcast(
+                    pruned_history_digests(spark, store_dir, batch_digests, batch_id)
+                )
+            else:  # first batch: no committed history yet
+                seen = digest_store(batch_df.limit(0), text_col)
+            novel, _ = incremental_exact_dedup(batch_df, seen, text_col, id_col)
+            _land_batch(novel, batch_id, sink_dir, _digests, store_dir)
         finally:
-            novel.unpersist()
+            if batch_digests is not None:
+                batch_digests.unpersist()
 
     return _write
 
@@ -336,20 +394,11 @@ def run_incremental_dedup_stream(
     """Drain available input through the incremental-dedup writer
     (availableNow trigger — the streaming analog of one ingest tick).
     `text_col`/`id_col` name the schema's payload and id columns."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(
-            incremental_dedup_writer(sink_dir, store_dir, text_col, id_col, n_buckets)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        incremental_dedup_writer(sink_dir, store_dir, text_col, id_col, n_buckets),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def _bucketed_band_rows(
@@ -393,12 +442,7 @@ def pruned_history_band_matches(
     text. Replays are deterministic: v < batch_id excludes the replaying
     batch's own half-written band delta.
     """
-    buckets = [r[0] for r in batch_bands.select("bucket").distinct().collect()]
-    history = (
-        spark.read.parquet(band_store_dir)
-        .filter(F.col("v") < F.lit(batch_id))
-        .filter(F.col("bucket").isin(buckets))
-    )
+    history = _pruned_history(spark, band_store_dir, batch_bands, batch_id)
     return (
         history.join(
             F.broadcast(
@@ -449,9 +493,9 @@ def streaming_neardup_writer(
          only: bands × 24 bytes per emitted doc, independent of text size.
       3. Novel docs land in sink_dir/batch_id=<b>/ and their band rows in
          band_store_dir/bucket=<pmod(xxhash64(band,band_hash),B)>/v=<b>/,
-         both DYNAMIC-overwrite partitioned — a replayed batch recomputes
-         against exactly the v < b history it saw the first time and
-         rewrites its own partitions byte-for-byte.
+         both written with `overwrite_partitions` — a replayed batch
+         recomputes against exactly the v < b history it saw the first time
+         and rewrites its own partitions byte-for-byte.
 
     The store indexes the EMITTED corpus only: a doc suppressed as a
     near-dup leaves no band rows, so future docs dedup against the kept
@@ -532,25 +576,7 @@ def streaming_neardup_writer(
             else:  # first batch: no committed band history yet
                 novel = kept
 
-            novel.persist()
-            try:
-                (
-                    novel.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(sink_dir)
-                )
-                (
-                    _band_rows(novel)
-                    .withColumn("v", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket", "v")
-                    .parquet(band_store_dir)
-                )
-            finally:
-                novel.unpersist()
+            _land_batch(novel, batch_id, sink_dir, _band_rows, band_store_dir)
         finally:
             if kept_bands is not None:
                 kept_bands.unpersist()
@@ -577,22 +603,13 @@ def run_streaming_neardup(
     (availableNow trigger — one ingest tick). `neardup_kw` forwards the
     MinHash/verify knobs (num_hashes, bands, shingle_k, threshold,
     max_bucket, n_buckets)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(
-            streaming_neardup_writer(
-                sink_dir, band_store_dir, text_col, id_col, **neardup_kw
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        streaming_neardup_writer(
+            sink_dir, band_store_dir, text_col, id_col, **neardup_kw
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def session_window_counts(
@@ -650,31 +667,27 @@ def ann_ingest_writer(
 
         store_dir/cell=<nearest centroid>/v=<batch_id>/
 
-    written with dynamic partition overwrite, so a replayed batch replaces
-    its own partitions byte-for-byte (the route_fanout_batch_writer
-    contract) and the store never rewrites history — batch b's write is
-    O(|batch b|) however large the index has grown. The query side
-    (`search_ann_store`) partition-prunes to probed cells, so a top-k probe
-    reads ~corpus·n_probe/n_cells rows regardless of how many batches have
-    ever been ingested.
+    written with `overwrite_partitions`, so a replayed batch replaces its
+    own partitions byte-for-byte and the store never rewrites history —
+    batch b's write is O(|batch b|) however large the index has grown. The
+    query side (`search_ann_store`) partition-prunes to probed cells, so a
+    top-k probe reads ~corpus·n_probe/n_cells rows regardless of how many
+    batches have ever been ingested.
     """
     from hatchery_spark.functions.similarity import _cell_assign_udf
 
     assign1 = _cell_assign_udf(centroids, 1)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        cells = (
             batch_df.select(
                 F.col(id_col),
                 F.col(vec_col).cast("array<double>").alias("_cv"),
             )
             .withColumn("cell", F.element_at(assign1(F.col("_cv")), 1))
             .withColumn("v", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "v")
-            .parquet(store_dir)
         )
+        overwrite_partitions(cells, "cell", "v").parquet(store_dir)
 
     return _write
 
@@ -692,20 +705,11 @@ def run_ann_ingest_stream(
 ):
     """Drain available input through the ANN-ingest writer (availableNow
     trigger — one ingest tick; same harness as the dedup streams)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(
-            ann_ingest_writer(store_dir, centroids, id_col, vec_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        ann_ingest_writer(store_dir, centroids, id_col, vec_col),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def search_ann_store(
@@ -831,20 +835,11 @@ def run_cdc_stream(
     """Drain available change files into the snapshot table (availableNow
     trigger — one CDC apply tick). Change rows carry the key, any subset
     of the table's columns to update, and optionally a delete flag."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(
-            cdc_merge_writer(table_path, key_col, delete_col, app_id, run_ts)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        cdc_merge_writer(table_path, key_col, delete_col, app_id, run_ts),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def interval_join_streams(
@@ -905,44 +900,20 @@ def hll_ingest_writer(
     Reading the store = read the latest version only; every version is a
     complete snapshot, so time travel over ingest history is free.
     """
-    import os as _os
-
     from hatchery_spark.operators.sketches import hll_registers
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         regs = hll_registers(batch_df, key_col, group_cols)
-        prev = _latest_hll_version(spark, store_dir, before=batch_id)
+        prev = _latest_snapshot(batch_df.sparkSession, store_dir, before=batch_id)
         if prev is not None:
             regs = (
                 prev.unionByName(regs)
                 .groupBy(*group_cols, "reg")
                 .agg(F.max("m_rank").alias("m_rank"))
             )
-        out = _os.path.join(store_dir, f"v={batch_id}")
-        regs.write.mode("overwrite").parquet(out)
+        regs.write.mode("overwrite").parquet(f"{store_dir}/v={batch_id}")
 
     return _write
-
-
-def _latest_hll_version(spark, store_dir: str, before: int | None = None):
-    """Latest complete register snapshot strictly below `before` (replay
-    of batch b must merge against the pre-b state, not its own output)."""
-    import os as _os
-
-    if not _os.path.isdir(store_dir):
-        return None
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in _os.listdir(store_dir)
-        if d.startswith("v=")
-        and _os.path.exists(_os.path.join(store_dir, d, "_SUCCESS"))
-    )
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    return spark.read.parquet(_os.path.join(store_dir, f"v={versions[-1]}"))
 
 
 def hll_store_estimates(
@@ -951,7 +922,7 @@ def hll_store_estimates(
     """Cardinality estimates from the store's latest snapshot."""
     from hatchery_spark.operators.sketches import hll_estimate
 
-    regs = _latest_hll_version(spark, store_dir)
+    regs = _latest_snapshot(spark, store_dir)
     if regs is None:
         raise FileNotFoundError(f"no committed HLL snapshot in {store_dir}")
     return hll_estimate(regs, group_cols)
@@ -969,27 +940,18 @@ def run_hll_ingest_stream(
 ):
     """Drain available input through the HLL writer (availableNow
     trigger — one ingest tick; same harness as the other streams)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(
-            hll_ingest_writer(store_dir, key_col, group_cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        hll_ingest_writer(store_dir, key_col, group_cols),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def sigma_alert_writer(rules, out_dir: str):
     """foreachBatch: parse the micro-batch, evaluate the WHOLE Sigma rule
     pack in one projection (operators/sigma.py — compiled once here on
-    the driver, reused every batch), land alerts exactly-once via the
-    batch_id dynamic-overwrite contract of route_fanout_batch_writer."""
+    the driver, reused every batch), land alerts exactly-once in
+    out_dir/alerts/batch_id=<b>/ via `overwrite_partitions`."""
     from hatchery_spark.operators.sigma import apply_rules
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -998,13 +960,9 @@ def sigma_alert_writer(rules, out_dir: str):
             rules,
             ["conv_id", "turn_idx", "ts"],
         )
-        (
-            alerts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/alerts")
-        )
+        overwrite_partitions(
+            alerts.withColumn("batch_id", F.lit(batch_id)), "batch_id"
+        ).parquet(f"{out_dir}/alerts")
 
     return _write
 
@@ -1020,16 +978,13 @@ def run_sigma_alert_stream(
     """Streaming detection: the Sigma pack over a transcript file stream.
     availableNow + checkpoint ⇒ a restart resumes after the last committed
     batch; a replayed batch overwrites exactly its own partition."""
-    stream = read_transcripts_stream(spark, input_path, max_files_per_trigger)
-    q = (
-        stream.select(*TRANSCRIPT_COLUMNS)
-        .writeStream.foreachBatch(sigma_alert_writer(rules, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        read_transcripts_stream(spark, input_path, max_files_per_trigger).select(
+            *TRANSCRIPT_COLUMNS
+        ),
+        sigma_alert_writer(rules, out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def mg_ingest_writer(store_dir: str, key_col: str, k: int = 16):
@@ -1056,13 +1011,10 @@ def mg_ingest_writer(store_dir: str, key_col: str, k: int = 16):
     from hatchery_spark.operators.sketches import mg_merge_all, mg_sketch
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        spark = batch_df.sparkSession
         batch_sk = mg_sketch(
             batch_df, F.col(key_col), F.lit(0).cast("int"), k=k
         )
-        prev = _latest_hll_version(spark, store_dir, before=batch_id)
+        prev = _latest_snapshot(batch_df.sparkSession, store_dir, before=batch_id)
         if prev is not None:
             prev_sk = prev.select(
                 F.lit(1).cast("int").alias("shard"),
@@ -1078,8 +1030,7 @@ def mg_ingest_writer(store_dir: str, key_col: str, k: int = 16):
             )
         else:
             merged = mg_merge_all(batch_sk, k=k)
-        out = _os.path.join(store_dir, f"v={batch_id}")
-        merged.write.mode("overwrite").parquet(out)
+        merged.write.mode("overwrite").parquet(f"{store_dir}/v={batch_id}")
 
     return _write
 
@@ -1096,15 +1047,8 @@ def run_mg_ingest_stream(
 ):
     """Drain available input through the MG writer (availableNow trigger;
     same harness as the HLL ingest stream)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_path)
-        .writeStream.foreachBatch(mg_ingest_writer(store_dir, key_col, k=k))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_stream(spark, input_path, schema, max_files_per_trigger),
+        mg_ingest_writer(store_dir, key_col, k=k),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q

@@ -197,3 +197,49 @@ def test_schema_resolution_errors():
     }
     with _pytest.raises(ValueError, match="cannot resolve"):
         parse_ocf_resolved(buf, demote)
+
+
+def test_fast_encoder_records_equal_reference_encoder():
+    """The vectorized encoder `write_avro_files` uses emits, record for
+    record, the bytes of the reference `write_ocf` for every field type
+    `_avro_schema_for` maps — including nullable longs past 2^53, which a
+    float64 round trip would round."""
+    import numpy as np
+    import pandas as pd
+
+    from hatchery_spark.functions.avro import _encode_columns_fast, _write_ocf_frames
+
+    big = 2**53 + 1
+    ts = [
+        "2025-06-01 12:34:56.123456", None, "1970-01-01", "1969-12-31 23:59:59", "2038-01-19"
+    ]
+    cols = {  # name: (avro type, values, pandas dtype)
+        "n": ("long", [big, None, -big, 0, -1], "Int64"),
+        "i": ("int", [1, 2, None, -3, 2**31 - 1], "Int32"),
+        "x": ("double", [1.5, None, -0.25, 1e300, 0.0], "float64"),
+        "f": ("float", [0.5, None, 2.0, -1.0, 3.25], "float32"),
+        "b": ("boolean", [True, None, False, True, False], "object"),
+        "s": ("string", ["a", None, "héllo", "", "z" * 200], "object"),
+        "y": ("bytes", [b"\x00\x01", None, b"", b"xyz", b"\xff" * 3], "object"),
+        "ts": ({"type": "long", "logicalType": "timestamp-micros"}, ts, "datetime64[ns]"),
+    }
+    schema = {
+        "type": "record",
+        "name": "row",
+        "fields": [{"name": c, "type": ["null", t]} for c, (t, _, _) in cols.items()],
+    }
+    pdf = pd.DataFrame({c: pd.Series(v, dtype=d) for c, (_, v, d) in cols.items()})
+    micros = [None if t is None else pd.Timestamp(t).value // 1000 for t in ts]
+    records = [
+        {c: (micros[r] if c == "ts" else v[r]) for c, (_, v, _) in cols.items()}
+        for r in range(len(pdf))
+    ]
+
+    buf, rec_lens = _encode_columns_fast(schema, pdf, {"ts"})
+    bounds = np.concatenate([[0], np.cumsum(rec_lens)])
+    one_per_block = [(1, buf[bounds[r] : bounds[r + 1]]) for r in range(len(pdf))]
+    assert _write_ocf_frames(schema, one_per_block, "null", None) == write_ocf(
+        schema, records, records_per_block=1
+    )
+    _, back = parse_ocf(write_ocf(schema, records))
+    assert [r["n"] for r in back] == [big, None, -big, 0, -1]

@@ -82,3 +82,39 @@ def test_replay_is_byte_stable(spark, tmp_path):
         if v.startswith("v=")
     }
     assert before == after
+
+
+def test_hll_and_mg_stores_keep_state_on_a_uri_path(spark, tmp_path):
+    """The HLL and MG streams find their previous snapshot on the store's
+    Hadoop FileSystem, so a store named by a file:// URI accumulates the same
+    state as one named by a plain path."""
+    from hatchery_spark.streaming.stream import (
+        hll_store_estimates,
+        run_hll_ingest_stream,
+    )
+
+    schema = "grp string, key string"
+    inp = str(tmp_path / "in")
+    for b in range(3):
+        rows = [("a", f"k{b}_{i}") for i in range(200)] + [("a", "whale")] * 100
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inp)
+
+    def drain(root):
+        hll, mg = f"{root}/hll", f"{root}/mg"
+        run_hll_ingest_stream(
+            spark, inp, hll, f"{root}/ck_hll", schema, "key", ["grp"],
+            max_files_per_trigger=1,
+        )
+        run_mg_ingest_stream(
+            spark, inp, mg, f"{root}/ck_mg", schema, "key", k=6, max_files_per_trigger=1
+        )
+        est = {r.grp: r.estimate for r in hll_store_estimates(spark, hll, ["grp"]).collect()}
+        counters = {
+            r["key"]: (r["est"], r["deficit"])
+            for r in spark.read.parquet(f"{mg}/v=2").collect()
+        }
+        return est, counters
+
+    plain = drain(str(tmp_path / "plain"))
+    assert plain[0]["a"] > 450  # three batches' 601 distinct keys, not one batch's 201
+    assert drain((tmp_path / "uri").as_uri()) == plain

@@ -312,3 +312,51 @@ def test_gorilla_bucket_table(spark):
     assert (r.n_zero, r.n_7bit, r.n_9bit, r.n_12bit, r.n_32bit) == (3, 3, 0, 2, 1)
     assert r.total_bits == 64 + 3 * 1 + 3 * 9 + 2 * 16 + 36
     assert r.permille == r.total_bits * 1000 // 640
+
+
+def test_lineage_mismatch_raises_and_leaves_route_uncommitted(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """Lineage that disagrees with the count observed on the write raises
+    LineageParityError, and the route is not acked in the manifest."""
+    import hatchery_spark.pipeline as pipeline
+    from hatchery_spark.pipeline import LineageParityError
+
+    real = pipeline.partition_metrics
+
+    def drop_biggest_partition(df):
+        return real(df).orderBy(F.desc("row_count")).offset(1)
+
+    monkeypatch.setattr(pipeline, "partition_metrics", drop_biggest_partition)
+    manifest = ManifestStore(str(tmp_path / "manifest"))
+    run_ts = "2025-06-04 02:00:00"
+    with pytest.raises(LineageParityError):
+        run_pipeline(
+            spark, transcripts, ROUTES[:1], str(tmp_path / "sinks"),
+            run_ts=run_ts, manifest=manifest,
+        )
+    assert not manifest.is_committed(run_ts, ROUTES[0].route_id)
+    assert manifest.all_records() == []
+
+
+def test_unreadable_manifest_file_reruns_the_route(spark, transcripts, tmp_path):
+    """A truncated manifest file counts as uncommitted: the next tick re-runs
+    that route, commits it, and its sink holds each row once."""
+    out_dir = str(tmp_path / "sinks")
+    manifest = ManifestStore(str(tmp_path / "manifest"))
+    run_ts = "2025-06-04 03:00:00"
+    first = run_pipeline(spark, transcripts, ROUTES, out_dir, run_ts=run_ts, manifest=manifest)
+    torn = ROUTES[1].route_id
+    with open(manifest._path(run_ts, torn), "w") as f:
+        f.write("{")
+    assert not manifest.is_committed(run_ts, torn)
+    assert manifest.load(run_ts, torn) is None
+    assert {r.route_id for r in manifest.all_records()} == set(first.counts) - {torn}
+
+    again = run_pipeline(spark, transcripts, ROUTES, out_dir, run_ts=run_ts, manifest=manifest)
+    assert sorted(again.skipped) == sorted(set(first.counts) - {torn})
+    assert again.counts == first.counts
+    assert manifest.is_committed(run_ts, torn)
+    back = spark.read.parquet(again.sinks[torn])
+    assert back.count() == first.counts[torn]
+    assert back.groupBy("conv_id", "turn_idx").count().filter("count > 1").isEmpty()
