@@ -474,12 +474,22 @@ def write_avro_files(
     cols = [f.name for f in df.schema.fields]
     ts_cols = {f.name for f in df.schema.fields
                if f.dataType.simpleString() in ("timestamp", "timestamp_ntz")}
-    recs = df.withColumn("file_id", F.pmod(F.xxhash64(order_col), F.lit(files)))
+    # a bigint column holding a NULL reaches pandas as float64, which rounds
+    # past 2^53: ship it as coalesce(c, 0) plus a NULL flag instead
+    nullable = {f.name: f"_isnull{i}" for i, f in enumerate(df.schema.fields)
+                if f.nullable and f.dataType.simpleString() == "bigint"}
+    recs = df.select(
+        *(F.coalesce(df[c], F.lit(0)).alias(c) if c in nullable else df[c] for c in cols),
+        *(F.isnull(df[c]).alias(flag) for c, flag in nullable.items()),
+        F.pmod(F.xxhash64(order_col), F.lit(files)).alias("file_id"),
+    )
 
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         fid = int(pdf.file_id.iloc[0])
+        for c, flag in nullable.items():
+            pdf[c] = pd.arrays.IntegerArray(pdf[c].to_numpy(np.int64), pdf[flag].to_numpy(bool))
         pdf = pdf.sort_values(order_col)
         codec = "deflate" if fid % 2 == 0 else "null"
         buf, rec_lens = _encode_columns_fast(schema, pdf[cols], ts_cols)

@@ -821,8 +821,9 @@ def semdedup(
     relative to the corpus at realistic dup rates). The final labels join
     back to the corpus is AQE-broadcast when the dup set is small and a
     narrow (id, id) shuffle join otherwise. NOTE: this call is EAGER (the
-    quantizer fit and the component iteration both run jobs), unlike the
-    lazy builders in this module.
+    quantizer fit and the component iteration both run jobs, and the result
+    is an eager local checkpoint, so the persisted projection is released
+    before returning), unlike the lazy builders in this module.
 
     Recall caveat (inherent to SemDeDup, not this implementation): a
     ≥-threshold pair straddling a Voronoi boundary lands in different
@@ -871,7 +872,7 @@ def semdedup(
     )
     labels = resolve_duplicate_groups(pairs)
     rep = F.coalesce(F.col("canonical_id"), F.col(id_col))
-    return (
+    out = (
         c.select(F.col(id_col))
         .join(
             labels.select(F.col("doc_id").alias(id_col), "canonical_id"),
@@ -883,7 +884,10 @@ def semdedup(
             rep.alias("rep_id"),
             (rep == F.col(id_col)).alias("keep"),
         )
+        .localCheckpoint()
     )
+    c.unpersist()
+    return out
 
 
 # ------------------------------------------------------- distributed k-means

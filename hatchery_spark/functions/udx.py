@@ -7,7 +7,7 @@ equivalents, in preference order:
   2. Arrow-vectorized pandas_udf — scalar (parse.py) and GROUPED_AGG (here),
   3. Python UDTF (Spark 4 Arrow-optimized) for one-row→many-rows expansion,
   4. mapInPandas / applyInPandas(WithState) for whole-batch logic
-     (lineage.py, multimodal.py, streaming/stateful.py).
+     (multimodal.py, streaming/stateful.py).
 Row-at-a-time `udf()` is deliberately absent — banned on the hot path.
 """
 
@@ -97,8 +97,9 @@ def grouped_apply(df, keys, fn, schema):
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         outs = []
+        # dropna=False: a NULL key is a group, as in applyInPandas
         for _, grp in pdf.groupby(keys[0] if len(keys) == 1 else keys,
-                                  sort=False):
+                                  sort=False, dropna=False):
             r = fn(grp)
             if r is not None and len(r):
                 outs.append(r)

@@ -9,10 +9,12 @@ uncommitted routes and a completed run is a no-op — idempotent because each
 route's write replaces only its own run_ts partitions (sinks.overwrite_partitions).
 A manifest file that cannot be read counts as uncommitted.
 
-Lineage metrics are collected DISTRIBUTED-SIDE with a mapInPandas pass that emits
-one summary row per physical partition (partition_id, row_count, key min/max) —
-O(partitions) rows back to the driver, never O(data). At 10^12 rows this is the
-only affordable shape for per-partition accounting.
+Lineage metrics are one native aggregate over the persisted route frame,
+grouped by `spark_partition_id()`: a partial aggregate per task over the cached
+blocks, one small shuffle, and O(partitions) rows back to the driver, never
+O(data) — no Python worker, no Arrow export. The same step serves every sink
+format: the text sinks (json, yaml, log) have no file footers to read bounds
+from, and Spark writes `ts` to parquet as INT96, which carries no statistics.
 
 The manifest itself is a tiny JSON-file-per-route directory — a deliberately
 dependency-free stand-in for an Iceberg snapshot/commit; swap `ManifestStore` for
@@ -24,61 +26,33 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict, dataclass, field
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "partition_id int, row_count long, min_conv_id string, max_conv_id string, "
-    "min_turn_idx int, max_turn_idx int, min_ts timestamp, max_ts timestamp"
-)
-
 
 def partition_metrics(df: DataFrame) -> DataFrame:
-    """One summary row per physical partition of `df`.
+    """One summary row per non-empty physical partition of `df`, in
+    partition order: (partition_id, row_count, min/max of conv_id, turn_idx
+    and ts).
 
-    Arrow-batched; accumulates across batches within a partition and emits a
-    single row at iterator exhaustion (mapInPandas sees all batches of its
-    partition in order).
+    A partition that holds no rows gets no row — its write task landed no
+    file either, so the manifest lists exactly the partitions that landed.
     """
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        n = 0
-        min_conv = max_conv = None
-        min_turn = max_turn = None
-        min_ts = max_ts = None
-        for b in batches:
-            if len(b) == 0:
-                continue
-            n += len(b)
-            bc_min, bc_max = b["conv_id"].min(), b["conv_id"].max()
-            bt_min, bt_max = b["turn_idx"].min(), b["turn_idx"].max()
-            bs_min, bs_max = b["ts"].min(), b["ts"].max()
-            min_conv = bc_min if min_conv is None else min(min_conv, bc_min)
-            max_conv = bc_max if max_conv is None else max(max_conv, bc_max)
-            min_turn = bt_min if min_turn is None else min(min_turn, bt_min)
-            max_turn = bt_max if max_turn is None else max(max_turn, bt_max)
-            min_ts = bs_min if min_ts is None else min(min_ts, bs_min)
-            max_ts = bs_max if max_ts is None else max(max_ts, bs_max)
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "row_count": [n],
-                "min_conv_id": [min_conv],
-                "max_conv_id": [max_conv],
-                "min_turn_idx": [min_turn],
-                "max_turn_idx": [max_turn],
-                "min_ts": [min_ts],
-                "max_ts": [max_ts],
-            }
+    return (
+        df.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.count("*").alias("row_count"),
+            F.min("conv_id").alias("min_conv_id"),
+            F.max("conv_id").alias("max_conv_id"),
+            F.min("turn_idx").alias("min_turn_idx"),
+            F.max("turn_idx").alias("max_turn_idx"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
         )
-
-    return df.select("conv_id", "turn_idx", "ts").mapInPandas(summarize, LINEAGE_SCHEMA)
+        .coalesce(1)
+        .sortWithinPartitions("partition_id")
+    )
 
 
 @dataclass

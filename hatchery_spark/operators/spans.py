@@ -34,7 +34,10 @@ from pyspark.sql import functions as F
 
 def assemble_span_tree(df: DataFrame, max_depth: int = 32) -> DataFrame:
     """``(trace_id, span_id, parent_id)`` → + ``depth``, ``path``,
-    ``is_leaf``. ``parent_id`` NULL marks a root."""
+    ``is_leaf``. ``parent_id`` NULL marks a root.
+
+    Eager: the BFS runs one job per level, and the result is returned as an
+    eager local checkpoint so every frame persisted on the way is released."""
     # the span frame is re-joined at EVERY BFS level (plus the orphan
     # anti-join and the parent flag derivation at the end) — persist it
     # once so each level probes a cached 3-column frame instead of
@@ -101,13 +104,17 @@ def assemble_span_tree(df: DataFrame, max_depth: int = 32) -> DataFrame:
         .distinct()
         .withColumn("has_child", F.lit(True))
     )
-    return (
+    out = (
         full.join(parents, ["trace_id", "span_id"], "left")
         .select(
             "trace_id", "span_id", "parent_id", "depth", "path",
             F.coalesce(~F.col("has_child"), F.lit(True)).alias("is_leaf"),
         )
+        .localCheckpoint()
     )
+    for frame in (spans, *levels):
+        frame.unpersist()
+    return out
 
 
 def span_tree_oracle_sql(spans_sql: str, max_depth: int = 32) -> str:

@@ -243,3 +243,12 @@ def test_fast_encoder_records_equal_reference_encoder():
     )
     _, back = parse_ocf(write_ocf(schema, records))
     assert [r["n"] for r in back] == [big, None, -big, 0, -1]
+
+
+def test_nullable_bigint_roundtrips_exactly(spark):
+    """A bigint column that holds a NULL keeps every bit past 2^53."""
+    big = 2**53 + 1
+    df = spark.createDataFrame([(1, big), (2, None), (3, -big)], "k bigint, v bigint")
+    (blob,) = write_avro_files(df, files=1, order_col="k").collect()
+    _, recs = parse_ocf(blob.content)
+    assert [(r["k"], r["v"]) for r in recs] == [(1, big), (2, None), (3, -big)]

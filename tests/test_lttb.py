@@ -83,3 +83,14 @@ def test_non_dense_idx_raises(spark):
 def test_m_below_three_rejected(spark):
     with pytest.raises(ValueError, match="m must be"):
         lttb_downsample(_series(spark, [(1, 1)]), "g", m=2)
+
+
+def test_null_series_key_is_kept(spark):
+    # a NULL series key is a series of its own (applyInPandas semantics),
+    # not silently dropped by the per-partition pandas groupby
+    pts = [(100 + 10 * i, i % 5) for i in range(10)]
+    rows = [(g, i + 1, t, v) for g in ("a", None) for i, (t, v) in enumerate(pts)]
+    df = spark.createDataFrame(rows, "g string, idx long, t_s long, v_i long")
+    out = lttb_downsample(df, "g", m=4).collect()
+    assert {r["g"] for r in out} == {"a", None}
+    assert sum(r["g"] is None for r in out) == 4

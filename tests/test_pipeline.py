@@ -360,3 +360,78 @@ def test_unreadable_manifest_file_reruns_the_route(spark, transcripts, tmp_path)
     back = spark.read.parquet(again.sinks[torn])
     assert back.count() == first.counts[torn]
     assert back.groupBy("conv_id", "turn_idx").count().filter("count > 1").isEmpty()
+
+
+def _persisted_route_frame(spark, transcripts):
+    from hatchery_spark.router import ordered_for_sink, route_matches
+
+    matched = ordered_for_sink(route_matches(
+        prepare(transcripts, service_catalog_df(spark)), ROUTES[0]
+    )).persist()
+    matched.count()  # populate cache (stands in for the write action)
+    return matched
+
+
+def _python_partition_summary(df):
+    """Per non-empty partition of `df`, the lineage row built in plain Python."""
+
+    def summarize(pid, rows):
+        rows = list(rows)
+        if rows:
+            yield {
+                "partition_id": pid,
+                "row_count": len(rows),
+                **{
+                    f"{agg.__name__}_{c}": agg(r[c] for r in rows)
+                    for c in ("conv_id", "turn_idx", "ts")
+                    for agg in (min, max)
+                },
+            }
+
+    return df.rdd.mapPartitionsWithIndex(summarize).collect()
+
+
+def test_partition_metrics_equal_python_summary(spark, transcripts):
+    from hatchery_spark.lineage import partition_metrics
+
+    matched = _persisted_route_frame(spark, transcripts)
+    try:
+        got = [r.asDict() for r in partition_metrics(matched).collect()]
+        assert got == _python_partition_summary(matched)
+        assert sum(p["row_count"] for p in got) == matched.count()
+    finally:
+        matched.unpersist()
+
+
+def test_partition_metrics_plan_runs_no_python(spark, transcripts):
+    """Lineage is a native aggregate: no Python worker in its plan."""
+    from hatchery_spark.lineage import partition_metrics
+
+    matched = _persisted_route_frame(spark, transcripts)
+    try:
+        metrics = partition_metrics(matched)
+        metrics.collect()
+        plan = metrics._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+    finally:
+        matched.unpersist()
+
+
+def test_partition_metrics_skip_empty_partitions(spark, transcripts):
+    """A partition that holds no rows gets no lineage row (its write task
+    lands no file), so no `row_count: 0` record reaches the manifest."""
+    from hatchery_spark.lineage import partition_metrics
+
+    two_convs = transcripts.where(F.col("conv_id").isin(
+        [r.conv_id for r in transcripts.select("conv_id").distinct().limit(2).collect()]
+    ))
+    df = two_convs.repartition(6, "conv_id").persist()
+    try:
+        sizes = df.rdd.glom().map(len).collect()
+        assert 0 in sizes
+        got = [r.asDict() for r in partition_metrics(df).collect()]
+        assert [p["partition_id"] for p in got] == [i for i, n in enumerate(sizes) if n]
+        assert [p["row_count"] for p in got] == [n for n in sizes if n]
+    finally:
+        df.unpersist()

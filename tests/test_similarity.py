@@ -322,3 +322,18 @@ def test_semdedup_matches_brute_force_components(spark):
                     parent[max(ra, rb)] = min(ra, rb)
     want = {(i, find(i), find(i) == i) for i in range(80)}
     assert got == want
+
+
+def test_semdedup_leaves_no_persisted_frame(spark, pinned_rdds):
+    """The persisted (id, vec) projection is released before semdedup
+    returns; only the result's own local checkpoint stays registered, and
+    Spark frees that with the frame."""
+    rng = np.random.default_rng(31)
+    vecs = rng.normal(size=(30, 8))
+    vecs[20] = vecs[2]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    before = pinned_rdds()
+    out = sim.semdedup(emb, threshold=0.95, n_centroids=3).collect()
+    assert len(out) == 30
+    assert pinned_rdds() == before

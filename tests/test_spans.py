@@ -57,3 +57,13 @@ def test_deep_chain(spark):
     out = assemble_span_tree(_spans(spark, rows)).collect()
     assert max(r["depth"] for r in out) == n - 1
     assert sum(r["is_leaf"] for r in out) == 1
+
+
+def test_no_persisted_frame_outlives_the_call(spark, pinned_rdds):
+    # the span frame, the roots and every kept level are released
+    df = _spans(spark, [
+        ("t1", 0, None), ("t1", 1, 0), ("t1", 2, 1), ("t1", 3, 77),
+    ])
+    before = pinned_rdds()
+    assert len(assemble_span_tree(df).collect()) == 4
+    assert pinned_rdds() == before
