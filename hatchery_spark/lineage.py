@@ -9,9 +9,10 @@ uncommitted routes and a completed run is a no-op — idempotent because each
 route's write replaces only its own run_ts partitions (sinks.overwrite_partitions).
 A manifest file that cannot be read counts as uncommitted.
 
-Lineage metrics are one native aggregate over the persisted route frame,
-grouped by `spark_partition_id()`: a partial aggregate per task over the cached
-blocks, one small shuffle, and O(partitions) rows back to the driver, never
+Lineage metrics are one native aggregate over a tick's persisted routed frame,
+grouped by (`route_id`, `spark_partition_id()`), so partition ids number the
+routes' shared shuffle: a partial aggregate per task over the cached blocks,
+one small shuffle, and O(routes × partitions) rows back to the driver, never
 O(data) — no Python worker, no Arrow export. The same step serves every sink
 format: the text sinks (json, yaml, log) have no file footers to read bounds
 from, and Spark writes `ts` to parquet as INT96, which carries no statistics.
@@ -26,21 +27,24 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict, dataclass, field
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def partition_metrics(df: DataFrame) -> DataFrame:
-    """One summary row per non-empty physical partition of `df`, in
-    partition order: (partition_id, row_count, min/max of conv_id, turn_idx
-    and ts).
+    """One summary row per route with rows in each physical partition of
+    `df`, sorted by (route_id, partition_id): (route_id, partition_id,
+    row_count, min/max of conv_id, turn_idx and ts).
 
-    A partition that holds no rows gets no row — its write task landed no
-    file either, so the manifest lists exactly the partitions that landed.
+    A partition that holds none of a route's rows gets no row for that route
+    — that route's write task landed no file there either, so the manifest
+    lists exactly the partitions that landed.
     """
     return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
+        df.groupBy("route_id", F.spark_partition_id().alias("partition_id"))
         .agg(
             F.count("*").alias("row_count"),
             F.min("conv_id").alias("min_conv_id"),
@@ -51,7 +55,7 @@ def partition_metrics(df: DataFrame) -> DataFrame:
             F.max("ts").alias("max_ts"),
         )
         .coalesce(1)
-        .sortWithinPartitions("partition_id")
+        .sortWithinPartitions("route_id", "partition_id")
     )
 
 
@@ -69,6 +73,15 @@ class ManifestStore:
     """Checkpointed run manifest: one JSON file per (run_ts, route_id)."""
 
     def __init__(self, root: str):
+        """`root` is a local path or a `file:` URI. Any other scheme raises
+        ValueError: `os` calls would take it for a relative path and commit
+        under the working directory, where a resume from elsewhere never
+        finds the record."""
+        url = urlparse(root)
+        if url.scheme == "file":
+            root = url2pathname(url.path)
+        elif url.scheme:
+            raise ValueError(f"ManifestStore needs a local path or file: URI, got {root!r}")
         self.root = root
         os.makedirs(root, exist_ok=True)
 

@@ -1,11 +1,11 @@
 """End-to-end batch pipeline: scan → parse → enrich → route → sink → metrics.
 
-The Spark-native rebuild of the reference's Run lifecycle
-(/root/reference/hatchery.go:36-77): selectors choose routes, every selected
-route consumes the SAME parsed+enriched dataset (persisted once), each route is
-one filtered write action, and a manifest commit after each successful write
-gives crash-resume at route granularity (ack-after-write semantics,
-/root/reference/source/falcon_data_replicator/client.go:217-224).
+The Spark-native rebuild of the reference's Run lifecycle (hatchery.go:36-77):
+selectors choose routes, every selected route consumes the SAME routed frame
+(routed, ordered and persisted once per tick), each route is one filtered write
+action, and a manifest commit after each successful write gives crash-resume at
+route granularity (ack-after-write semantics, the reference's
+source/falcon_data_replicator/client.go:217-224).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from hatchery_spark.datagen import service_catalog_df
 from hatchery_spark.enrich import enrich_turns
 from hatchery_spark.lineage import ManifestStore, RouteRunRecord, partition_metrics
 from hatchery_spark.parse import parse_turns
-from hatchery_spark.router import route_matches, ordered_for_sink, write_route_frame
+from hatchery_spark.router import ordered_for_sink, routed_union, write_route_frame
 from hatchery_spark.timerange import window_filter
 
 TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
@@ -70,16 +70,23 @@ def run_pipeline(
     collect_lineage: bool = True,
     max_parallel_routes: int = 1,
 ) -> PipelineResult:
-    """Run one tick: fan selected routes out from a single cached enriched DF.
+    """Run one tick: every pending route writes its share of ONE routed frame.
+
+    The frame, `ordered_for_sink(routed_union(enriched, pending))`, is
+    persisted once and filled by one action before any write: the lineage
+    aggregate keyed by (route, partition) when `collect_lineage`, else a count.
+    Manifest `partitions` ids number that shared shuffle, which AQE coalesces
+    over all routes together; the rows per sink do not depend on it.
 
     Resume: routes already committed in `manifest` for this run_ts are skipped;
-    each route commits only after its write action returns.
+    each route commits only after its write action returns, and only if its
+    observed row count equals its lineage rows (else LineageParityError).
 
     max_parallel_routes > 1 submits route write actions from a driver thread
     pool — the Spark scheduler interleaves the jobs across executors — which is
-    the reference's goroutine-per-selected-stream shape
-    (/root/reference/hatchery.go:55-67). Results are identical to sequential
-    execution; only action submission order changes.
+    the reference's goroutine-per-selected-stream shape (hatchery.go:55-67).
+    Results are identical to sequential execution; only action submission
+    order changes.
     """
     selected = select_routes(routes, list(selectors))
     if catalog is None:
@@ -101,64 +108,45 @@ def run_pipeline(
     if not pending:
         return result
 
-    def run_route(route: RouteConfig) -> tuple[RouteConfig, str, int, list[dict]]:
-        """One route: filter+order once, write it, derive lineage from the SAME
-        physical pass. The ordered frame is persisted so the write action
-        populates the cache and the lineage pass re-reads cached blocks —
-        the filter + salted shuffle + sort are paid exactly once."""
-        matched = ordered_for_sink(route_matches(enriched, route))
-        if collect_lineage:
-            matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # row count rides on the write action (df.observe) — no extra pass
-            sink, n = write_route_frame(matched, route, out_dir, run_ts)
-            if collect_lineage:
-                parts = [r.asDict() for r in partition_metrics(matched).collect()]
-                lineage_n = sum(p["row_count"] for p in parts)
-                if lineage_n != n:
-                    raise LineageParityError(
-                        f"route {route.route_id}: lineage rows {lineage_n} != "
-                        f"written rows {n}"
-                    )
-            else:
-                parts = []
-        finally:
-            if collect_lineage:
-                matched.unpersist()
-        # commit immediately (ack-after-write): a crash later in the run loses
-        # no finished route. Manifest files are per-(run_ts, route) → no
-        # cross-thread contention.
-        if manifest is not None:
-            manifest.commit(
-                RouteRunRecord(
-                    run_ts=run_ts,
-                    route_id=route.route_id,
-                    sink_path=sink,
-                    row_count=n,
-                    committed=True,
-                    partitions=parts,
-                )
-            )
-        return route, sink, n, parts
+    routed = ordered_for_sink(routed_union(enriched, pending))
+    lineage: dict[str, list[dict]] = {r.route_id: [] for r in pending}
 
-    # pay scan+parse+enrich once; each pending route re-reads cached blocks
-    enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    def run_route(route: RouteConfig) -> tuple[RouteConfig, str, int]:
+        """Write one route's share of the routed frame, check it against that
+        route's lineage rows, and commit right after the write
+        (ack-after-write): a crash later in the tick loses no finished route.
+        One manifest file per (run_ts, route) → no cross-thread contention."""
+        parts = lineage[route.route_id]
+        # row count rides on the write action (df.observe) — no extra pass
+        sink, n = write_route_frame(
+            routed.where(F.col("route_id") == route.route_id), route, out_dir, run_ts
+        )
+        lineage_n = sum(p["row_count"] for p in parts)
+        if collect_lineage and lineage_n != n:
+            raise LineageParityError(
+                f"route {route.route_id}: lineage rows {lineage_n} != written rows {n}"
+            )
+        if manifest is not None:
+            manifest.commit(RouteRunRecord(run_ts, route.route_id, sink, n, partitions=parts))
+        return route, sink, n
+
+    routed.persist(StorageLevel.MEMORY_AND_DISK)
     try:
+        # one action fills the cache before any write, sequential or pooled
+        if collect_lineage:
+            for row in partition_metrics(routed).collect():
+                part = row.asDict()
+                lineage[part.pop("route_id")].append(part)
+        else:
+            routed.count()
         if max_parallel_routes > 1 and len(pending) > 1:
-            # materialize the shared cache BEFORE fanning out: concurrent
-            # route jobs otherwise stampede the un-populated cache (block
-            # locks serialize the partition computes across the pool, so
-            # the "parallel" phase degrades to sequential compute plus
-            # lock waits). One count() populates every cached block, then
-            # the pool's jobs only pay filter+shuffle+write.
-            enriched.count()
             with ThreadPoolExecutor(max_workers=max_parallel_routes) as pool:
                 outcomes = list(pool.map(run_route, pending))
         else:
             outcomes = [run_route(route) for route in pending]
-        for route, sink, n, _parts in outcomes:
+        for route, sink, n in outcomes:
             result.counts[route.route_id] = n
             result.sinks[route.route_id] = sink
     finally:
-        enriched.unpersist()
+        routed.unpersist()
     return result

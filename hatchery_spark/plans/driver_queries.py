@@ -774,10 +774,11 @@ def q_kv_explode(spark, sf_dir):
 
 
 def q_lineage_metrics(spark, sf_dir):
-    """Per-partition lineage summary (rows-only: partition ids are physical)."""
+    """Per-partition lineage summary of the whole table as one route
+    (rows-only: partition ids are physical)."""
     from hatchery_spark.lineage import partition_metrics
 
-    return partition_metrics(transcripts(spark, sf_dir))
+    return partition_metrics(transcripts(spark, sf_dir).withColumn("route_id", F.lit("all")))
 
 
 # ----------------------------------------------------------------------------
@@ -4418,10 +4419,12 @@ def q_media_thumbnail(spark, sf_dir):
 
 def q_lineage_totals(spark, sf_dir):
     """Global reduction of the per-partition lineage rows — partition ids are
-    physical (rows-only), but their totals must equal the table's aggregates."""
+    physical (rows-only), but their totals must equal the table's aggregates.
+    The whole table is one route."""
     from hatchery_spark.lineage import partition_metrics
 
-    return partition_metrics(transcripts(spark, sf_dir)).agg(
+    one_route = transcripts(spark, sf_dir).withColumn("route_id", F.lit("all"))
+    return partition_metrics(one_route).agg(
         F.sum("row_count").alias("total_rows"),
         F.min("min_conv_id").alias("min_conv_id"),
         F.max("max_conv_id").alias("max_conv_id"),

@@ -1,21 +1,23 @@
 """Tag-based router: fan rows out to per-destination sinks.
 
 Rebuilds the reference's pipeline wiring — selector-chosen streams each running
-source→pipe→destination in parallel (/root/reference/hatchery.go:37-77) — as
-per-route filtered writes over ONE shared, cached, parsed+enriched DataFrame:
+source→pipe→destination in parallel (hatchery.go:37-77) — as per-route writes
+over ONE shared, routed and cached DataFrame:
 
   * route selection (which routes run)   = config-side selectors (config.py)
-  * row routing (which rows go to a sink) = each route's SQL predicate, evaluated
-    by Catalyst → the filter is pushed as far down as the plan allows
-  * fan-out = a loop of write ACTIONS over the cached DF. The scan+parse+enrich
-    work is paid once (persist), each route pays only its filter+write. On a
+  * row routing (which rows go to a sink) = routed_union, one pass that
+    evaluates every route's SQL predicate per row and explodes the matching
+    route ids, so a row appears once per route it matches
+  * fan-out = ordered_for_sink over the routed rows (one salted shuffle and
+    sort for every route), persisted once, then one write ACTION per route
+    (write_route_frame over a route_id filter of the cached frame). On a
     cluster, routes can also be submitted from a driver thread pool (Spark's
     scheduler interleaves jobs); sequential actions over a cached DF are the
     simple, predictable default.
   * per-sink counts (sink_counts) = ONE global aggregate, a conditional count
     per route reshaped by stack; counting never materialises routed rows.
-    routed_union is the row-level surface (one explode of matching route ids)
-    for queries that need the routed rows themselves.
+  * route_matches is one route's filter, for writers that handle a route at a
+    time (the streaming micro-batch writer).
 
 A row matching k route predicates is written k times (one per sink) — identical
 to the reference, where multiple streams may select overlapping data. A row
@@ -45,12 +47,13 @@ def route_matches(df: DataFrame, route: RouteConfig) -> DataFrame:
 def routed_union(df: DataFrame, routes: Sequence[RouteConfig]) -> DataFrame:
     """All routed rows as one DataFrame (row duplicated per matching route).
 
-    This is the parity surface: routed-row equality and per-sink counts are
-    defined over it. Implemented as a SINGLE-PASS fan-out — every route
-    predicate is evaluated once per row and matching route_ids explode out —
-    rather than a union of k filtered scans, which would re-read the input k
-    times. Multiset-identical to the union formulation (rows matching no route
-    drop; rows matching k routes appear k times).
+    This is the production fan-out: a batch tick persists it, ordered, and
+    writes every route from it (pipeline.run_pipeline); routed-row equality
+    and per-sink counts are defined over it. A SINGLE-PASS fan-out — every
+    route predicate is evaluated once per row and matching route_ids explode
+    out — rather than a union of k filtered scans, which would re-read the
+    input k times. Multiset-identical to the union formulation (rows matching
+    no route drop; rows matching k routes appear k times).
     """
     match_tags = F.array_compact(
         F.array(*[F.when(F.expr(r.predicate), F.lit(r.route_id)) for r in routes])
@@ -192,14 +195,3 @@ def write_route_frame(
         writer.parquet(sink)
     return sink, int(observation.get["row_count"])
 
-
-def write_route(
-    df: DataFrame,
-    route: RouteConfig,
-    base_path: str,
-    run_ts: str = "1970-01-01 00:00:00",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> tuple[str, int]:
-    """Filter, order and write one route's rows (see write_route_frame)."""
-    matched = ordered_for_sink(route_matches(df, route), salt_buckets)
-    return write_route_frame(matched, route, base_path, run_ts)

@@ -2,7 +2,12 @@ from pyspark.sql import functions as F
 
 from hatchery_spark.config import RouteConfig
 from hatchery_spark.datagen import transcripts_df
-from hatchery_spark.router import write_route
+from hatchery_spark.router import ordered_for_sink, route_matches, write_route_frame
+
+
+def write_route(df, route, base_path):
+    """Filter, order and write one route's rows through the sink writer."""
+    return write_route_frame(ordered_for_sink(route_matches(df, route)), route, base_path)
 
 
 def test_json_gzip_sink_roundtrip(spark, tmp_path):

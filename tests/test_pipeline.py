@@ -373,22 +373,27 @@ def _persisted_route_frame(spark, transcripts):
 
 
 def _python_partition_summary(df):
-    """Per non-empty partition of `df`, the lineage row built in plain Python."""
+    """Per route with rows in each partition of `df`, the lineage row built in
+    plain Python, sorted by (route_id, partition_id)."""
 
     def summarize(pid, rows):
-        rows = list(rows)
-        if rows:
+        by_route = {}
+        for r in rows:
+            by_route.setdefault(r["route_id"], []).append(r)
+        for route_id, group in by_route.items():
             yield {
+                "route_id": route_id,
                 "partition_id": pid,
-                "row_count": len(rows),
+                "row_count": len(group),
                 **{
-                    f"{agg.__name__}_{c}": agg(r[c] for r in rows)
+                    f"{agg.__name__}_{c}": agg(r[c] for r in group)
                     for c in ("conv_id", "turn_idx", "ts")
                     for agg in (min, max)
                 },
             }
 
-    return df.rdd.mapPartitionsWithIndex(summarize).collect()
+    parts = df.rdd.mapPartitionsWithIndex(summarize).collect()
+    return sorted(parts, key=lambda p: (p["route_id"], p["partition_id"]))
 
 
 def test_partition_metrics_equal_python_summary(spark, transcripts):
@@ -426,7 +431,7 @@ def test_partition_metrics_skip_empty_partitions(spark, transcripts):
     two_convs = transcripts.where(F.col("conv_id").isin(
         [r.conv_id for r in transcripts.select("conv_id").distinct().limit(2).collect()]
     ))
-    df = two_convs.repartition(6, "conv_id").persist()
+    df = two_convs.repartition(6, "conv_id").withColumn("route_id", F.lit("r")).persist()
     try:
         sizes = df.rdd.glom().map(len).collect()
         assert 0 in sizes
@@ -435,3 +440,75 @@ def test_partition_metrics_skip_empty_partitions(spark, transcripts):
         assert [p["row_count"] for p in got] == [n for n in sizes if n]
     finally:
         df.unpersist()
+
+
+def test_partition_metrics_keyed_by_route_over_routed_union(spark, transcripts):
+    """Over a multi-route routed frame, the one lineage aggregate gives each
+    route's rows per partition, equal to a plain-Python summary."""
+    from hatchery_spark.lineage import partition_metrics
+    from hatchery_spark.router import ordered_for_sink
+
+    routed = ordered_for_sink(_spark_routed(spark, transcripts)).persist()
+    try:
+        routed.count()
+        got = [r.asDict() for r in partition_metrics(routed).collect()]
+        assert got == _python_partition_summary(routed)
+        assert {p["route_id"] for p in got} == {r.route_id for r in ROUTES}
+    finally:
+        routed.unpersist()
+
+
+def test_each_added_route_costs_one_job(spark, transcripts, tmp_path):
+    """The routed frame is shuffled, persisted and summarised once per tick,
+    so a route adds only its write job."""
+    sc = spark.sparkContext
+
+    def jobs(routes):
+        group = f"route-jobs-{len(routes)}"
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(
+                spark, transcripts, routes, str(tmp_path / group),
+                run_ts="2025-06-04 04:00:00",
+                manifest=ManifestStore(str(tmp_path / f"{group}-manifest")),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(ROUTES) - jobs(ROUTES[:1]) == 2
+
+
+def test_every_written_parquet_file_sorted_by_conv_turn(spark, transcripts, tmp_path):
+    """Each file a tick writes, read on its own, is ordered by (conv_id,
+    turn_idx): the route filter over the shared ordered frame keeps it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    res = run_pipeline(spark, transcripts, ROUTES, str(tmp_path / "sinks"),
+                       run_ts="2025-06-04 05:00:00")
+    files = [f for sink in res.sinks.values()
+             for f in glob.glob(f"{sink}/**/*.parquet", recursive=True)]
+    assert files
+    for f in files:
+        keys = list(zip(*pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pydict().values()))
+        assert keys == sorted(keys), f
+
+
+def test_manifest_file_uri_resumes_from_another_cwd(tmp_path, monkeypatch):
+    """A `file://` manifest root commits at its local path, so a resume from
+    another working directory sees the record."""
+    from hatchery_spark.lineage import RouteRunRecord
+
+    root = tmp_path / "manifest"
+    ManifestStore(root.as_uri()).commit(
+        RouteRunRecord(run_ts="2025-06-04 06:00:00", route_id="r", sink_path="s", row_count=1)
+    )
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    monkeypatch.chdir(elsewhere)
+    assert ManifestStore(root.as_uri()).is_committed("2025-06-04 06:00:00", "r")
+    assert ManifestStore(str(root)).is_committed("2025-06-04 06:00:00", "r")
+    with pytest.raises(ValueError):
+        ManifestStore("hdfs://namenode/manifest")
