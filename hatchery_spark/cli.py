@@ -38,7 +38,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("-t", "--tags", nargs="*", default=[], help="select routes by tag")
     p.add_argument("-a", "--all", action="store_true", help="select all routes")
     p.add_argument("--input", help="transcripts parquet path")
-    p.add_argument("--out", help="sink base directory")
+    p.add_argument("--out", help="sink base directory: a path or any Hadoop URI")
     p.add_argument(
         "--compact", nargs=2, metavar=("SRC", "DST"),
         help="maintenance mode: rewrite a fragmented sink into ~target-sized "
@@ -49,7 +49,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         help="target output file size for --compact",
     )
     p.add_argument("--routes-json", help="route config JSON file (defaults to built-ins)")
-    p.add_argument("--manifest", help="manifest dir for resume (default <out>/_manifest)")
+    p.add_argument("--manifest", help="resume manifest dir or Hadoop URI (default <out>/_manifest)")
     p.add_argument("--run-ts", help="logical as-of time 'YYYY-mm-dd HH:MM:SS'")
     p.add_argument("--window", help="lookback window, e.g. '10 minutes'")
     p.add_argument("--start", help="tick loop start (RFC3339-ish)")

@@ -46,6 +46,9 @@ class RouteConfig:
     def validate(self) -> None:
         if not self.route_id:
             raise RouteValidationError("route has no ID")
+        # the id names one sink directory and one manifest file
+        if self.route_id in (".", "..") or any(c in self.route_id for c in "/\\"):
+            raise RouteValidationError(f"route ID {self.route_id!r} is not one path segment")
         if self.sink_format not in ("parquet", "json", "yaml", "log"):
             raise RouteValidationError(
                 f"route {self.route_id!r}: unsupported sink_format {self.sink_format!r}"

@@ -17,7 +17,8 @@ O(data) — no Python worker, no Arrow export. The same step serves every sink
 format: the text sinks (json, yaml, log) have no file footers to read bounds
 from, and Spark writes `ts` to parquet as INT96, which carries no statistics.
 
-The manifest itself is a tiny JSON-file-per-route directory — a deliberately
+The manifest itself is a tiny JSON-file-per-route directory, committed
+through `fscommit` on any Hadoop FileSystem — a deliberately
 dependency-free stand-in for an Iceberg snapshot/commit; swap `ManifestStore` for
 table commits when a catalog is configured.
 """
@@ -25,13 +26,12 @@ table commits when a catalog is configured.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import asdict, dataclass, field
-from urllib.parse import urlparse
-from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hatchery_spark import fscommit
 
 
 def partition_metrics(df: DataFrame) -> DataFrame:
@@ -70,40 +70,31 @@ class RouteRunRecord:
 
 
 class ManifestStore:
-    """Checkpointed run manifest: one JSON file per (run_ts, route_id)."""
+    """Checkpointed run manifest: one JSON file per (run_ts, route_id) under
+    `root`, a plain path or any Hadoop URI; it needs a running SparkContext."""
 
     def __init__(self, root: str):
-        """`root` is a local path or a `file:` URI. Any other scheme raises
-        ValueError: `os` calls would take it for a relative path and commit
-        under the working directory, where a resume from elsewhere never
-        finds the record."""
-        url = urlparse(root)
-        if url.scheme == "file":
-            root = url2pathname(url.path)
-        elif url.scheme:
-            raise ValueError(f"ManifestStore needs a local path or file: URI, got {root!r}")
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     def _path(self, run_ts: str, route_id: str) -> str:
         # the SAME normalization the sink run_ts= partition uses — a drift
         # between the two would silently break (run_ts, route) resume
         from hatchery_spark.router import safe_run_ts
 
-        return os.path.join(self.root, f"{safe_run_ts(run_ts)}__{route_id}.json")
+        return f"{self.root}/{safe_run_ts(run_ts)}__{route_id}.json"
 
     def _read(self, path: str) -> RouteRunRecord | None:
         """The record at `path`, or None if it is missing or unreadable.
 
         A torn or truncated manifest file (a crash outside `commit`'s
-        tmp + rename, a damaged disk) reads as uncommitted, so resume re-runs
-        that route — its sink write replaces its own partitions — instead of
-        failing every later tick on a parse error.
+        atomic publish, a damaged disk) reads as uncommitted, so resume
+        re-runs that route — its sink write replaces its own partitions —
+        instead of failing every later tick on a parse error.
         """
+        data = fscommit.read(path)
         try:
-            with open(path) as f:
-                return RouteRunRecord(**json.load(f))
-        except (FileNotFoundError, ValueError, TypeError):
+            return None if data is None else RouteRunRecord(**json.loads(data))
+        except (ValueError, TypeError):
             return None
 
     def is_committed(self, run_ts: str, route_id: str) -> bool:
@@ -111,21 +102,15 @@ class ManifestStore:
         return rec is not None and bool(rec.committed)
 
     def commit(self, record: RouteRunRecord) -> None:
-        """Atomic write (tmp + rename) AFTER the sink write succeeded."""
-        p = self._path(record.run_ts, record.route_id)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(asdict(record), f, default=str)
-        os.replace(tmp, p)
+        """Atomic publish AFTER the sink write succeeded. It replaces an
+        existing record, so an unreadable one is re-committed."""
+        data = json.dumps(asdict(record), default=str).encode()
+        fscommit.publish(self._path(record.run_ts, record.route_id), data, replace=True)
 
     def load(self, run_ts: str, route_id: str) -> RouteRunRecord | None:
         return self._read(self._path(run_ts, route_id))
 
     def all_records(self) -> list[RouteRunRecord]:
         """Every readable record, in file-name order."""
-        recs = (
-            self._read(os.path.join(self.root, name))
-            for name in sorted(os.listdir(self.root))
-            if name.endswith(".json")
-        )
+        recs = (self._read(p) for p in fscommit.glob(f"{self.root}/*.json"))
         return [r for r in recs if r is not None]

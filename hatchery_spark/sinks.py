@@ -25,6 +25,8 @@ import math
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
+from hatchery_spark import fscommit
+
 
 def overwrite_partitions(df: DataFrame, *cols: str) -> DataFrameWriter:
     """Writer for `df` partitioned by `cols` that overwrites only the
@@ -299,9 +301,7 @@ def compact_parquet_sink(
     """
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = fscommit.fs_path(src)
     if not fs.exists(hpath):
         # surface the argument-class failure as a normal Python exception —
         # letting getContentSummary throw buries it in a Py4J stack trace
@@ -445,7 +445,6 @@ def upsert_partitioned(
     emptied = [v for v in touched if v not in remaining]
     if emptied:
         jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         for v in emptied:
             try:
                 escaped = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(
@@ -453,8 +452,5 @@ def upsert_partitioned(
                 )
             except Exception:
                 escaped = str(v)
-            pdir = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_col}={escaped}")
-            fs = pdir.getFileSystem(hconf)
-            if fs.exists(pdir):
-                fs.delete(pdir, True)
+            fscommit.delete(f"{path}/{part_col}={escaped}")
     return sorted(touched)

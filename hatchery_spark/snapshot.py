@@ -18,13 +18,13 @@ Design (the Iceberg/Delta architecture, minimum viable form):
   manifest list), so reading any version is ONE manifest read — never a
   log replay, O(1) metadata reads at any history length.
 * Data is written FIRST, invisible, into a commit-attempt-unique
-  directory; the commit is published by linking the manifest into the
-  log under the next version number with a PUT-IF-ABSENT primitive
-  (`os.link` of a fully-written temp file — atomic, all-or-nothing on
-  POSIX). Two writers racing the same parent: exactly one link succeeds;
-  the loser's data directory is removed and `ConcurrentCommitError`
-  raised — optimistic concurrency, the caller refreshes and retries.
-  On an object store the same protocol rides S3 conditional PUT /
+  directory; the commit is published into the log under the next
+  version number with a PUT-IF-ABSENT primitive (`fscommit.publish` of a
+  fully-written temp file, on any Hadoop FileSystem). Two writers racing
+  the same parent: exactly one publish succeeds; the loser's data
+  directory is removed and `ConcurrentCommitError` raised — optimistic
+  concurrency, the caller refreshes and retries. On an object store
+  without an atomic rename the same protocol rides a conditional PUT /
   a catalog compare-and-swap; the manifest format is unchanged.
 * Readers NEVER see partial state: a version either has a complete
   manifest (whose data dirs were fully written before publish) or does
@@ -48,11 +48,11 @@ reference pkg/usecase/interfaces.go's injected clock).
 from __future__ import annotations
 
 import json
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from hatchery_spark import fscommit
 
 _LOG = "_log"
 _DATA = "data"
@@ -69,19 +69,14 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ log I/O
 
-    def _log_dir(self) -> str:
-        return os.path.join(self.path, _LOG)
-
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self._log_dir(), f"{version:020d}.json")
+        return f"{self.path}/{_LOG}/{version:020d}.json"
 
     def versions(self) -> list[int]:
-        d = self._log_dir()
-        if not os.path.isdir(d):
-            return []
+        # the digit glob skips publish's hidden temp files
         return sorted(
-            int(f[:-5]) for f in os.listdir(d)
-            if f.endswith(".json") and not f.startswith(".")
+            int(p.rsplit("/", 1)[1][:-5])
+            for p in fscommit.glob(f"{self.path}/{_LOG}/[0-9]*.json")
         )
 
     def version(self) -> int:
@@ -92,11 +87,10 @@ class SnapshotTable:
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.version() if version is None else version
-        p = self._manifest_path(v)
-        if not os.path.exists(p):
+        data = fscommit.read(self._manifest_path(v))
+        if data is None:
             raise FileNotFoundError(f"version {v} does not exist")
-        with open(p) as f:
-            return json.load(f)
+        return json.loads(data)
 
     def history(self) -> list[dict]:
         return [
@@ -107,35 +101,22 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ commits
 
-    def _publish(self, manifest: dict, version: int, data_dir: str | None,
-                 writer_id: str) -> None:
-        """Atomic put-if-absent of a fully-written manifest. The temp file
-        is completely written and fsynced BEFORE the link, so a reader can
-        never observe a partial manifest; `os.link` either creates the
-        final name (commit wins) or raises FileExistsError (commit loses —
-        the attempt's data dir is reclaimed immediately)."""
-        os.makedirs(self._log_dir(), exist_ok=True)
-        tmp = os.path.join(self._log_dir(), f".tmp-{version}-{writer_id}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._manifest_path(version))
-        except FileExistsError:
+    def _publish(self, manifest: dict, version: int, data_dir: str | None) -> None:
+        """Atomic put-if-absent of a fully-written manifest: a reader never
+        sees a partial one. A lost race reclaims the attempt's data dir and
+        raises ConcurrentCommitError."""
+        data = json.dumps(manifest, sort_keys=True).encode()
+        if not fscommit.publish(self._manifest_path(version), data):
             if data_dir:
-                shutil.rmtree(os.path.join(self.path, data_dir),
-                              ignore_errors=True)
+                fscommit.delete(f"{self.path}/{data_dir}")
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} was committed by "
                 f"another writer"
-            ) from None
-        finally:
-            os.unlink(tmp)
+            )
 
     def _write_data(self, df: DataFrame, version: int, writer_id: str) -> str:
-        rel = os.path.join(_DATA, f"v{version:09d}-{writer_id}")
-        df.write.mode("errorifexists").parquet(os.path.join(self.path, rel))
+        rel = f"{_DATA}/v{version:09d}-{writer_id}"
+        df.write.mode("errorifexists").parquet(f"{self.path}/{rel}")
         return rel
 
     def _commit(self, action: str, df: DataFrame | None, live: list[str],
@@ -165,7 +146,7 @@ class SnapshotTable:
             "removed": sorted(prev - set(live)),
             "txn": txns,
         }
-        self._publish(manifest, version, added[0] if added else None, writer_id)
+        self._publish(manifest, version, added[0] if added else None)
         return version
 
     # --------------------------------------------------------- operations
@@ -239,7 +220,7 @@ class SnapshotTable:
         schema = StructType.fromJson(json.loads(m["schema"]))
         if not m["live"]:
             return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.path, rel) for rel in m["live"]]
+        paths = [f"{self.path}/{rel}" for rel in m["live"]]
         return self.spark.read.schema(schema).parquet(*paths)
 
     def optimize(self, target_partitions: int = 1, run_ts: str = "",
@@ -280,7 +261,7 @@ class SnapshotTable:
         if not added:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, rel) for rel in added])
+            *[f"{self.path}/{rel}" for rel in added])
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Delete data dirs referenced by NO retained manifest (the last
@@ -290,13 +271,12 @@ class SnapshotTable:
         vs = self.versions()
         retained = vs[-keep_last:] if keep_last > 0 else []
         keep = {rel for v in retained for rel in self.manifest(v)["live"]}
-        data_root = os.path.join(self.path, _DATA)
         removed = []
-        for d in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
-            rel = os.path.join(_DATA, d)
+        for p in fscommit.glob(f"{self.path}/{_DATA}/*"):
+            rel = f"{_DATA}/{p.rsplit('/', 1)[1]}"
             if rel not in keep:
-                shutil.rmtree(os.path.join(self.path, rel))
+                fscommit.delete(p)
                 removed.append(rel)
         for v in vs[:-keep_last] if keep_last > 0 else []:
-            os.unlink(self._manifest_path(v))
+            fscommit.delete(self._manifest_path(v))
         return removed

@@ -21,9 +21,8 @@ Every stream here is built from three shared pieces:
     write a whole v=<batch_id>/ snapshot; the CDC writer commits through
     snapshot.SnapshotTable's txn map instead.
   * one versioned-store probe (`_store_versions`): committed versions are
-    globbed on the store's Hadoop FileSystem, so a plain path and a URI name
-    the same store, and a replay of batch b reads only versions v < b — the
-    history it saw the first time.
+    globbed through `fscommit`, so a plain path and a URI name the same store,
+    and a replay of batch b reads only versions v < b — the history it saw.
 
 Watermarked windows, sessions and stream-stream joins keep state bounded for
 queries that run indefinitely.
@@ -36,6 +35,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hatchery_spark import fscommit
 from hatchery_spark.config import RouteConfig, validate_routes
 from hatchery_spark.datagen import service_catalog_df
 from hatchery_spark.enrich import enrich_turns
@@ -79,24 +79,19 @@ def _drain(
     return q
 
 
-def _store_versions(
-    spark: SparkSession, store_dir: str, committed_glob: str
-) -> list[int]:
+def _store_versions(store_dir: str, committed_glob: str) -> list[int]:
     """Sorted versions <n> of the committed files matching
     `store_dir/<committed_glob>`, each of which sits in a v=<n>/ directory.
 
-    The glob runs on the store's Hadoop FileSystem, so a plain path and a URI
-    (file://, s3a://, …) name the same store. Only committed files count: a
-    crash mid-write leaves _temporary/ or a v= directory without _SUCCESS,
-    and that must read as no version, not wedge every replay on a partial
-    read.
+    The glob runs through `fscommit`, on any Hadoop FileSystem. Only committed
+    files count: a crash mid-write leaves _temporary/ or a v= directory
+    without _SUCCESS, and that must read as no version, not wedge every
+    replay on a partial read.
     """
-    hadoop = spark._jvm.org.apache.hadoop.fs
-    fs = hadoop.Path(store_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(hadoop.Path(f"{store_dir}/{committed_glob}")) or []
-    return sorted(
-        {int(st.getPath().getParent().getName().split("=", 1)[1]) for st in statuses}
-    )
+    return sorted({
+        int(p.rsplit("/", 2)[1].split("=", 1)[1])
+        for p in fscommit.glob(f"{store_dir}/{committed_glob}")
+    })
 
 
 def _latest_snapshot(
@@ -106,7 +101,7 @@ def _latest_snapshot(
     n < `before`, or None. A replay of batch b must merge against the pre-b
     state, not its own output."""
     versions = [
-        v for v in _store_versions(spark, store_dir, "v=*/_SUCCESS")
+        v for v in _store_versions(store_dir, "v=*/_SUCCESS")
         if before is None or v < before
     ]
     return spark.read.parquet(f"{store_dir}/v={versions[-1]}") if versions else None
@@ -249,7 +244,7 @@ def has_committed_store(spark: SparkSession, store_dir: str) -> bool:
     (transient FS failure, corrupt footer, permissions) still fails the
     batch and retries rather than silently dropping history.
     """
-    return bool(_store_versions(spark, store_dir, "bucket=*/v=*/part-*"))
+    return bool(_store_versions(store_dir, "bucket=*/v=*/part-*"))
 
 
 def _pruned_history(

@@ -58,3 +58,11 @@ def test_bad_format_rejected():
     # every reference DataFormat is accepted (json≡jsonl, yaml, raw log)
     for fmt in ("parquet", "json", "yaml", "log"):
         validate_routes([RouteConfig("a", sink_format=fmt)])
+
+
+@pytest.mark.parametrize("route_id", ["a/b", "../esc", "a\\b", ".", ".."])
+def test_id_that_is_not_one_path_segment_rejected(route_id):
+    # the id names the route's sink directory and its manifest file
+    with pytest.raises(RouteValidationError, match="one path segment"):
+        validate_routes([RouteConfig(route_id)])
+    validate_routes([RouteConfig("a.b..c")])

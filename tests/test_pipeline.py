@@ -496,7 +496,7 @@ def test_every_written_parquet_file_sorted_by_conv_turn(spark, transcripts, tmp_
         assert keys == sorted(keys), f
 
 
-def test_manifest_file_uri_resumes_from_another_cwd(tmp_path, monkeypatch):
+def test_manifest_file_uri_resumes_from_another_cwd(spark, tmp_path, monkeypatch):
     """A `file://` manifest root commits at its local path, so a resume from
     another working directory sees the record."""
     from hatchery_spark.lineage import RouteRunRecord
@@ -510,5 +510,3 @@ def test_manifest_file_uri_resumes_from_another_cwd(tmp_path, monkeypatch):
     monkeypatch.chdir(elsewhere)
     assert ManifestStore(root.as_uri()).is_committed("2025-06-04 06:00:00", "r")
     assert ManifestStore(str(root)).is_committed("2025-06-04 06:00:00", "r")
-    with pytest.raises(ValueError):
-        ManifestStore("hdfs://namenode/manifest")

@@ -135,6 +135,30 @@ def test_manifest_carries_full_live_set(spark, tdir):
         assert json.load(f) == m
 
 
+def test_file_uri_table_reads_from_another_cwd(spark, tmp_path, monkeypatch):
+    """A `file://` table keeps its log beside its data, so a reader in
+    another working directory sees every version, by URI or plain path."""
+    root = tmp_path / "t"
+    start, elsewhere = tmp_path / "start", tmp_path / "elsewhere"
+    start.mkdir()
+    elsewhere.mkdir()
+    monkeypatch.chdir(start)
+    t = SnapshotTable.create(spark, root.as_uri(), _df(spark, [(1, "a")]))
+    t.append(_df(spark, [(2, "b")]))
+    monkeypatch.chdir(elsewhere)
+    for path in (root.as_uri(), str(root)):
+        other = SnapshotTable(spark, path)
+        assert other.versions() == [1, 2]
+        assert sorted(r.k for r in other.read().collect()) == [1, 2]
+        assert sorted(r.k for r in other.read(1).collect()) == [1]
+    vacuumed = SnapshotTable(spark, root.as_uri())
+    assert vacuumed.vacuum(keep_last=1) == []  # v2 still lists both data dirs
+    assert vacuumed.versions() == [2]
+    assert sorted(r.k for r in vacuumed.read().collect()) == [1, 2]
+    assert os.listdir(root / "_log") == [f"{2:020d}.json"]  # no temp, no .crc
+    assert not [p for d in (start, elsewhere) for p in d.iterdir()]
+
+
 # ------------------------------------------------------------ CDC streaming
 
 
