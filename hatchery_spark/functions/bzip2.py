@@ -7,6 +7,10 @@ Burrows-Wheeler transform at origPtr, RLE1 run expansion, and both block
 and stream CRCs verified (bzip2's CRC-32 is MSB-first — NOT zlib's
 reflected variant).
 
+The code tables are canonical, as in DEFLATE: a 10-bit MSB-first
+``npwire.huffman_table`` read by ``MsbBits.symbol``; the rare 11-20 bit
+codes take its escape map.
+
 Fixtures are produced by stdlib ``bz2`` (the real bzip2 library), so the
 decoder is pinned against genuine archives, not a sibling encoder's
 idiosyncrasies — the strongest interop evidence available in-sandbox.
@@ -28,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hatchery_spark.functions.npwire import MsbBits
+from hatchery_spark.functions.npwire import MsbBits, huffman_table
 
 __all__ = ["bunzip2", "bzip2_decode_col"]
 
@@ -62,51 +66,6 @@ def _bz_crc_fast(data: bytes) -> int:
     FINAL value (already xored), i.e. _bz_crc(data) ^ 0xFFFFFFFF."""
     rev = _REV8[np.frombuffer(data, dtype=np.uint8)].tobytes()
     return int(f"{zlib.crc32(rev):032b}"[::-1], 2)
-
-
-def _huff_decode_tables(lengths: list[int]):
-    """bzip2 canonical Huffman: (limit, base, perm) per the reference
-    decoder's scheme — decode by extending the code until it is <= the
-    limit for its length."""
-    min_len, max_len = min(lengths), max(lengths)
-    perm = []
-    for ln in range(min_len, max_len + 1):
-        for sym, L in enumerate(lengths):
-            if L == ln:
-                perm.append(sym)
-    limit = [0] * (max_len + 2)
-    base = [0] * (max_len + 2)
-    cnt = [0] * (max_len + 2)
-    for L in lengths:
-        cnt[L] += 1
-    vec = 0
-    idx = 0
-    for ln in range(min_len, max_len + 1):
-        vec += cnt[ln]
-        limit[ln] = vec - 1
-        vec <<= 1
-        base[ln + 1] = vec - (idx + cnt[ln])
-        idx += cnt[ln]
-    return min_len, max_len, limit, base, perm
-
-
-def _read_huff_symbol(bits: MsbBits, table) -> int:
-    """One slice+parse for the minimum length, then per-bit extension via
-    direct byte indexing into the expanded bit string (no take() call per
-    bit — this loop runs once per decoded symbol and dominates decode)."""
-    min_len, max_len, limit, base, perm = table
-    s, p = bits.s, bits.p
-    if p + min_len > bits.nbits:
-        raise ValueError("truncated bitstream")
-    ln = min_len
-    code = int(s[p : p + min_len], 2)
-    while code > limit[ln]:
-        code = (code << 1) | (s[p + ln] - 48)
-        ln += 1
-        if ln > max_len:
-            raise ValueError("bzip2: bad Huffman code")
-    bits.p = p + ln
-    return perm[code - base[ln] if ln > min_len else code]
 
 
 def bunzip2(blob: bytes) -> bytes:
@@ -174,7 +133,7 @@ def bunzip2(blob: bytes) -> bytes:
                     if not 1 <= ln <= 20:
                         raise ValueError("bzip2: bad code length")
                 lengths.append(ln)
-            tables.append(_huff_decode_tables(lengths))
+            tables.append(huffman_table(lengths, 10, lsb_first=False))
         eob = n_sym - 1
         # the format's hard block limit: RLE2-decoded (BWT input) data is at
         # most level·100000 bytes — bounding run/len(bwt) here stops a
@@ -197,7 +156,7 @@ def bunzip2(blob: bytes) -> bytes:
                 table = tables[selectors[sel_idx]]
                 group_pos = 50
             group_pos -= 1
-            sym = _read_huff_symbol(bits, table)
+            sym = bits.symbol(table)
             if sym <= 1:  # RUNA / RUNB: bijective base-2 run length
                 run += (sym + 1) << run_bit
                 run_bit += 1

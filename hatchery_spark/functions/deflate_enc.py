@@ -36,15 +36,16 @@ from hatchery_spark.functions.inflate import (
     _CLC_ORDER,
     _DIST_BASE,
     _DIST_EXTRA,
+    _FIXED_DIST_LENGTHS,
+    _FIXED_LIT_LENGTHS,
     _LEN_BASE,
     _LEN_EXTRA,
 )
+from hatchery_spark.functions.npwire import canonical_codes
 
 _MAX_DIST = 32768
 _MAX_LEN = 258
 _CHAIN = 32          # candidate positions examined per match attempt
-_FIXED_LIT_LENGTHS = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-_FIXED_DIST_LENGTHS = [5] * 30
 
 # length value (3..258) -> length symbol (257..285)
 _LEN_SYM = [0] * (_MAX_LEN + 1)
@@ -81,14 +82,6 @@ class _BitWriter:
             self.out.append(self.acc & 0xFF)
             self.acc >>= 8
             self.nbits -= 8
-
-    def code(self, code: int, n: int) -> None:
-        """Huffman code: MSB first within the LSB-first stream."""
-        rev = 0
-        for _ in range(n):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.bits(rev, n)
 
     def align(self) -> None:
         if self.nbits:
@@ -239,21 +232,6 @@ def _limited_lengths(freqs: dict[int, int], max_len: int,
     return lengths
 
 
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """RFC 1951 §3.2.2 canonical assignment: {sym: (code, nbits)}."""
-    codes: dict[int, tuple[int, int]] = {}
-    code = 0
-    by_len: dict[int, list[int]] = {}
-    for s, l in lengths.items():
-        by_len.setdefault(l, []).append(s)
-    for ln in range(1, max(by_len) + 1):
-        for s in sorted(by_len.get(ln, [])):
-            codes[s] = (code, ln)
-            code += 1
-        code <<= 1
-    return codes
-
-
 def _rle_lengths(lengths: list[int]) -> list[tuple[int, int, int]]:
     """HLIT+HDIST length sequence → (symbol, extra_value, extra_bits)
     triples using the 16 (repeat prev 3-6), 17 (zeros 3-10), 18
@@ -286,17 +264,14 @@ def _rle_lengths(lengths: list[int]) -> list[tuple[int, int, int]]:
     return out
 
 
-def _reverse_codes(codes: dict) -> dict:
-    """sym → (bit-reversed code, len): the per-token MSB-first reversal
-    done once per tree instead of once per emitted symbol."""
-    out = {}
-    for s, (c, n) in codes.items():
-        rev = 0
-        for _ in range(n):
-            rev = (rev << 1) | (c & 1)
-            c >>= 1
-        out[s] = (rev, n)
-    return out
+def _lsb_codes(pairs) -> dict:
+    """(sym, length) pairs → sym → (bit-reversed canonical code, length):
+    DEFLATE writes each code MSB-first into the LSB-first stream, and
+    reversing once per tree keeps that off the per-token path."""
+    return {
+        s: (int(f"{c:0{n}b}"[::-1], 2), n)
+        for s, (c, n) in canonical_codes(sorted(pairs)).items()
+    }
 
 
 def _emit_tokens(w: _BitWriter, tokens: list, lit_rev, dist_rev) -> None:
@@ -339,24 +314,16 @@ def deflate_stored(data: bytes) -> bytes:
     return w.bytes()
 
 
-_FIXED_LIT_REV: dict | None = None
-_FIXED_DIST_REV: dict | None = None
+_FIXED_LIT_REV = _lsb_codes(enumerate(_FIXED_LIT_LENGTHS))
+_FIXED_DIST_REV = _lsb_codes(enumerate(_FIXED_DIST_LENGTHS))
 
 
 def deflate_fixed(data: bytes, tokens: list | None = None) -> bytes:
-    global _FIXED_LIT_REV, _FIXED_DIST_REV
     if tokens is None:
         tokens = _lz77(data)
     w = _BitWriter()
     w.bits(1, 1)
     w.bits(1, 2)
-    if _FIXED_LIT_REV is None:  # the fixed trees are constants — build once
-        _FIXED_LIT_REV = _reverse_codes(
-            _canonical_codes({s: l for s, l in enumerate(_FIXED_LIT_LENGTHS)})
-        )
-        _FIXED_DIST_REV = _reverse_codes(
-            _canonical_codes({s: l for s, l in enumerate(_FIXED_DIST_LENGTHS)})
-        )
     _emit_tokens(w, tokens, _FIXED_LIT_REV, _FIXED_DIST_REV)
     return w.bytes()
 
@@ -387,7 +354,7 @@ def deflate_dynamic(data: bytes, tokens: list | None = None) -> bytes:
     for s, _, _ in rle:
         cl_f[s] = cl_f.get(s, 0) + 1
     cl_len = _limited_lengths(cl_f, 7)
-    cl_codes = _canonical_codes(cl_len)
+    cl_rev = _lsb_codes(cl_len.items())
     hclen = max(
         i + 1 for i, s in enumerate(_CLC_ORDER) if cl_len.get(s, 0) > 0
     )
@@ -402,12 +369,11 @@ def deflate_dynamic(data: bytes, tokens: list | None = None) -> bytes:
     for s in _CLC_ORDER[:hclen]:
         w.bits(cl_len.get(s, 0), 3)
     for s, ev, eb in rle:
-        c, n = cl_codes[s]
-        w.code(c, n)
+        w.bits(*cl_rev[s])
         if eb:
             w.bits(ev, eb)
-    _emit_tokens(w, tokens, _reverse_codes(_canonical_codes(lit_len)),
-                 _reverse_codes(_canonical_codes(dist_len)))
+    _emit_tokens(w, tokens, _lsb_codes(lit_len.items()),
+                 _lsb_codes(dist_len.items()))
     return w.bytes()
 
 

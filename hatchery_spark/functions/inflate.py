@@ -9,11 +9,10 @@ whose correctness evidence is INTEROP: it decodes bytes produced by
 zlib (a third-party encoder we don't control), unlike the snappy codec
 whose conformance is self-consistent.
 
-Decode tables are canonical-Huffman per RFC 1951 §3.2.2: codes of each
-length are assigned in symbol order starting from
-``(prev_code + prev_count) << 1``.  The decoder walks bits LSB-first
-(DEFLATE packs Huffman codes most-significant-bit-first within the
-LSB-first bit stream, so the walker accumulates bits reversed).
+Decode tables are canonical-Huffman per RFC 1951 §3.2.2: a 9-bit
+LSB-first ``npwire.huffman_table`` (DEFLATE packs each code MSB-first
+inside the LSB-first stream, so the table holds it bit-reversed), read
+by ``LsbBits.symbol``; the rare 10-15 bit codes take its escape map.
 
 Scale shape: one Arrow-batched UDF; each blob decodes where it sits.
 """
@@ -22,7 +21,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from hatchery_spark.functions.npwire import LsbBits, read_fixed
+from hatchery_spark.functions.npwire import LsbBits, huffman_table, lz_copy, read_fixed
 
 _LEN_BASE = [
     3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
@@ -44,56 +43,17 @@ _DIST_EXTRA = [
 _CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15]
 
 
-_LUT_BITS = 9
+_LUT_BITS = 9  # covers every fixed code; only length-10+ codes escape
 
 
-def _build_lut(lengths: list[int], lut_bits: int = _LUT_BITS):
-    """Flat decode table: index = next `lut_bits` stream bits (LSB-first,
-    i.e. the bit-reversed code plus free filler bits) → (symbol, length).
-    Codes longer than `lut_bits` fall back to the canonical dict walk
-    (rare: only length-10+ codes of a dynamic tree)."""
-    lut: list = [None] * (1 << lut_bits)
-    esc: dict[tuple[int, int], int] = {}
-    code = 0
-    for ln in range(1, max(lengths, default=0) + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                if ln <= lut_bits:
-                    rev = int(f"{code:0{ln}b}"[::-1], 2)
-                    entry = (sym, ln)
-                    for idx in range(rev, 1 << lut_bits, 1 << ln):
-                        lut[idx] = entry
-                else:
-                    esc[(ln, code)] = sym
-                code += 1
-        code <<= 1
-    return lut, esc
+def _table(lengths: list[int]):
+    return huffman_table(lengths, _LUT_BITS, lsb_first=True)
 
 
-def _decode_sym_lut(bits: LsbBits, lut, esc) -> int:
-    if bits.nbits < _LUT_BITS:
-        bits.fill(_LUT_BITS)
-    entry = lut[bits.acc & 0x1FF]
-    if entry is not None:
-        sym, ln = entry
-        if bits.nbits < ln:
-            raise ValueError("truncated bitstream")
-        bits.acc >>= ln
-        bits.nbits -= ln
-        return sym
-    # code longer than the table (or invalid): canonical bit-by-bit walk
-    code = 0
-    for ln in range(1, 16):
-        code = (code << 1) | bits.take(1)  # codes are MSB-first
-        if ln > _LUT_BITS:
-            sym = esc.get((ln, code))
-            if sym is not None:
-                return sym
-    raise ValueError("inflate: bad Huffman code")
-
-
-_FIXED_LIT_LUT = _build_lut([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
-_FIXED_DIST_LUT = _build_lut([5] * 30)
+_FIXED_LIT_LENGTHS = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8  # §3.2.6
+_FIXED_DIST_LENGTHS = [5] * 30
+_FIXED_LIT = _table(_FIXED_LIT_LENGTHS)
+_FIXED_DIST = _table(_FIXED_DIST_LENGTHS)
 
 
 def _read_dynamic(bits: LsbBits):
@@ -103,10 +63,10 @@ def _read_dynamic(bits: LsbBits):
     cl_lengths = [0] * 19
     for i in range(hclen):
         cl_lengths[_CLC_ORDER[i]] = bits.take(3)
-    cl_lut, cl_esc = _build_lut(cl_lengths)
+    cl_table = _table(cl_lengths)
     lengths: list[int] = []
     while len(lengths) < hlit + hdist:
-        sym = _decode_sym_lut(bits, cl_lut, cl_esc)
+        sym = bits.symbol(cl_table)
         if sym < 16:
             lengths.append(sym)
         elif sym == 16:
@@ -119,7 +79,7 @@ def _read_dynamic(bits: LsbBits):
             lengths.extend([0] * (11 + bits.take(7)))
     if len(lengths) != hlit + hdist:
         raise ValueError("inflate: code-length overrun")
-    return _build_lut(lengths[:hlit]), _build_lut(lengths[hlit:])
+    return _table(lengths[:hlit]), _table(lengths[hlit:])
 
 
 def inflate(buf: bytes) -> bytes:
@@ -138,13 +98,11 @@ def inflate(buf: bytes) -> bytes:
             out += data
             bits.seek_byte(p)
         elif btype in (1, 2):
-            (lit_lut, lit_esc), (dist_lut, dist_esc) = (
-                (_FIXED_LIT_LUT, _FIXED_DIST_LUT)
-                if btype == 1
-                else _read_dynamic(bits)
+            lit_table, dist_table = (
+                (_FIXED_LIT, _FIXED_DIST) if btype == 1 else _read_dynamic(bits)
             )
             while True:
-                sym = _decode_sym_lut(bits, lit_lut, lit_esc)
+                sym = bits.symbol(lit_table)
                 if sym == 256:
                     break
                 if sym < 256:
@@ -153,18 +111,13 @@ def inflate(buf: bytes) -> bytes:
                 if sym > 285:
                     raise ValueError("inflate: bad length symbol")
                 ln = _LEN_BASE[sym - 257] + bits.take(_LEN_EXTRA[sym - 257])
-                d = _decode_sym_lut(bits, dist_lut, dist_esc)
+                d = bits.symbol(dist_table)
                 if d > 29:
                     raise ValueError("inflate: bad distance symbol")
                 dist = _DIST_BASE[d] + bits.take(_DIST_EXTRA[d])
                 if dist > len(out):
                     raise ValueError("inflate: distance beyond output")
-                start = len(out) - dist
-                if dist >= ln:  # disjoint: one slice copy
-                    out += out[start : start + ln]
-                else:  # overlapping: the dist-byte pattern repeats
-                    pattern = out[start:]
-                    out += (pattern * (ln // dist + 1))[:ln]
+                lz_copy(out, dist, ln)
         else:
             raise ValueError("inflate: reserved block type")
         if bfinal:

@@ -32,6 +32,7 @@ import struct
 import numpy as np
 
 from hatchery_spark.functions.multimodal import DecoderUnavailable
+from hatchery_spark.functions.npwire import canonical_codes
 
 JPEG_MAGIC = b"\xff\xd8"
 
@@ -107,16 +108,20 @@ _DCT_M = np.array([
 
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """val → (code, length) per the canonical assignment of T.81 Annex C."""
-    out: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+    """BITS/HUFFVAL → val → (code, length): T.81 Annex C assigns the codes
+    of each length in HUFFVAL order."""
+    lengths = [n for n in range(1, 17) for _ in range(bits[n - 1])]
+    return canonical_codes([(vals[k], n) for k, n in enumerate(lengths)])
+
+
+def _skewed_bits(n: int) -> list[int]:
+    """BITS of the lossless fixture encoders' frequency-skewed code over n
+    categories: lengths 1, 2, …, n-1, n-1 (Kraft-complete for n ≥ 2), so
+    the most frequent category costs one bit."""
+    bits = [0] * 16
+    for ln in [1] if n == 1 else [*range(1, n), n - 1]:
+        bits[ln - 1] += 1
+    return bits
 
 
 def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:

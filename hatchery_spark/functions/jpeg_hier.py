@@ -309,16 +309,6 @@ def decode_hierarchical(content: bytes) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _skewed_dc_table(cats) -> tuple[list[int], list[int]]:
-    """Frequency-skewed canonical lengths 1,2,…,n-1,n-1 (Kraft-complete)."""
-    n = len(cats)
-    lengths = [1] if n == 1 else list(range(1, n)) + [n - 1]
-    bits = [0] * 16
-    for ln in lengths:
-        bits[ln - 1] += 1
-    return bits, list(cats)
-
-
 def _emit_diff_scan(diffs: np.ndarray, restart_interval: int = 0) -> tuple:
     """Huffman-code a raw difference plane (SOF7 payload): returns
     (DHT payload bits/vals, entropy body bytes)."""
@@ -329,13 +319,14 @@ def _emit_diff_scan(diffs: np.ndarray, restart_interval: int = 0) -> tuple:
         _canonical_codes,
         _category,
         _extend_bits,
+        _skewed_bits,
     )
 
     freq = Counter(
         16 if int(d) == -32768 else _category(int(d)) for d in diffs.ravel()
     )
     cats = [c for c, _ in freq.most_common()]
-    bits, vals = _skewed_dc_table(cats)
+    bits = _skewed_bits(len(cats))
     codes = _canonical_codes(bits, cats)
     bw = _BitWriter()
     body = bytearray()
@@ -357,7 +348,7 @@ def _emit_diff_scan(diffs: np.ndarray, restart_interval: int = 0) -> tuple:
             n += 1
     bw.flush()
     body += bw.out
-    return (bits, vals), bytes(body)
+    return (bits, cats), bytes(body)
 
 
 def _seg(marker: int, payload: bytes) -> bytes:

@@ -170,6 +170,7 @@ def encode_jpeg_gray_lossless(
         _canonical_codes,
         _category,
         _extend_bits,
+        _skewed_bits,
     )
 
     img = np.asarray(img)
@@ -230,14 +231,7 @@ def encode_jpeg_gray_lossless(
         16 if d == -32768 else _category(int(d)) for d in diffs.ravel()
     )
     cats = [c for c, _ in freq.most_common()]
-    # frequency-skewed canonical code: lengths 1,2,…,n-1,n-1 (Kraft-complete
-    # for any n ≥ 2) — the dominant category costs one bit, so smooth
-    # content actually compresses
-    n = len(cats)
-    lengths = [1] if n == 1 else list(range(1, n)) + [n - 1]
-    bits = [0] * 16
-    for ln in lengths:
-        bits[ln - 1] += 1
+    bits = _skewed_bits(len(cats))
     codes = _canonical_codes(bits, cats)
 
     def seg(marker, payload):
@@ -289,6 +283,7 @@ def encode_jpeg_rgb_lossless(
         _canonical_codes,
         _category,
         _extend_bits,
+        _skewed_bits,
     )
     from collections import Counter
 
@@ -339,11 +334,7 @@ def encode_jpeg_rgb_lossless(
         16 if d == -32768 else _category(d) for _, d in diff_plan()
     )
     cats = [c for c, _ in freq.most_common()]
-    n_cats = len(cats)
-    lengths = [1] if n_cats == 1 else list(range(1, n_cats)) + [n_cats - 1]
-    bits = [0] * 16
-    for ln in lengths:
-        bits[ln - 1] += 1
+    bits = _skewed_bits(len(cats))
     codes = _canonical_codes(bits, cats)
 
     def seg(marker, payload):

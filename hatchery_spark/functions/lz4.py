@@ -26,6 +26,8 @@ import struct
 
 import pandas as pd
 
+from hatchery_spark.functions.npwire import lz_copy, read_fixed
+
 _P1, _P2, _P3, _P4, _P5 = (
     2654435761,
     2246822519,
@@ -98,6 +100,11 @@ def xxh32(data: bytes, seed: int = 0) -> int:
 # ----------------------------------------------------------------- block
 
 
+def _read_le(buf: bytes, pos: int, n: int) -> tuple[int, int]:
+    raw, pos = read_fixed(buf, pos, n)
+    return int.from_bytes(raw, "little"), pos
+
+
 def _read_len(buf: bytes, pos: int, base: int) -> tuple[int, int]:
     if base == 15:
         while True:
@@ -118,23 +125,16 @@ def lz4_block_decompress(buf: bytes, history: bytes = b"") -> bytes:
     while pos < n:
         token = buf[pos]
         pos += 1
-        lit, pos = _read_len(buf, pos, token >> 4)
-        out += buf[pos : pos + lit]
-        pos += lit
+        nlit, pos = _read_len(buf, pos, token >> 4)
+        lit, pos = read_fixed(buf, pos, nlit)
+        out += lit
         if pos >= n:  # last sequence: literals only
             break
-        offset = int.from_bytes(buf[pos : pos + 2], "little")
-        pos += 2
+        offset, pos = _read_le(buf, pos, 2)
         if offset == 0 or offset > len(out):
             raise ValueError("lz4: bad match offset")
         mlen, pos = _read_len(buf, pos, token & 0xF)
-        mlen += 4
-        start = len(out) - offset
-        if offset >= mlen:  # disjoint: one slice copy
-            out += out[start : start + mlen]
-        else:  # overlapping RLE: the offset-byte pattern repeats
-            pattern = out[start:]
-            out += (pattern * (mlen // offset + 1))[:mlen]
+        lz_copy(out, offset, mlen + 4)
     return bytes(out[skip:])
 
 
@@ -210,9 +210,11 @@ def lz4_block_compress(data: bytes) -> bytes:
 
 
 def lz4_frame_decompress(buf: bytes) -> bytes:
-    if int.from_bytes(buf[:4], "little") != MAGIC:
+    magic, pos = _read_le(buf, 0, 4)
+    if magic != MAGIC:
         raise ValueError("lz4: bad frame magic")
-    flg = buf[4]
+    desc_start = pos
+    (flg, _bd), pos = read_fixed(buf, pos, 2)
     if flg >> 6 != 0b01:
         raise ValueError("lz4: unsupported frame version")
     b_indep = flg >> 5 & 1
@@ -220,31 +222,23 @@ def lz4_frame_decompress(buf: bytes) -> bytes:
     c_size = flg >> 3 & 1
     c_checksum = flg >> 2 & 1
     dict_id = flg & 1
-    pos = 6  # FLG + BD
-    desc_start = 4
     expect_size = None
     if c_size:
-        expect_size = int.from_bytes(buf[pos : pos + 8], "little")
-        pos += 8
+        expect_size, pos = _read_le(buf, pos, 8)
     if dict_id:
-        pos += 4
-    hc = buf[pos]
-    pos += 1
+        _, pos = read_fixed(buf, pos, 4)
+    hc, pos = _read_le(buf, pos, 1)
     want = xxh32(buf[desc_start:pos - 1]) >> 8 & 0xFF
     if hc != want:
         raise ValueError("lz4: header checksum mismatch")
     out = bytearray()
     while True:
-        word = int.from_bytes(buf[pos : pos + 4], "little")
-        pos += 4
+        word, pos = _read_le(buf, pos, 4)
         if word == 0:  # EndMark
             break
-        size = word & 0x7FFFFFFF
-        raw = buf[pos : pos + size]
-        pos += size
+        raw, pos = read_fixed(buf, pos, word & 0x7FFFFFFF)
         if b_checksum:
-            (bc,) = struct.unpack_from("<I", buf, pos)
-            pos += 4
+            bc, pos = _read_le(buf, pos, 4)
             if bc != xxh32(raw):
                 raise ValueError("lz4: block checksum mismatch")
         if word >> 31:
@@ -253,7 +247,7 @@ def lz4_frame_decompress(buf: bytes) -> bytes:
             hist = b"" if b_indep else bytes(out[-65536:])
             out += lz4_block_decompress(raw, hist)
     if c_checksum:
-        (cc,) = struct.unpack_from("<I", buf, pos)
+        cc, pos = _read_le(buf, pos, 4)
         if cc != xxh32(bytes(out)):
             raise ValueError("lz4: content checksum mismatch")
     if expect_size is not None and expect_size != len(out):

@@ -16,6 +16,11 @@ One definition of each byte-level building block the codecs in
   zstd's FSE table headers) and ``MsbBits`` (MSB-first, precomputed
   ASCII bit string: bzip2 and Gorilla). Reading past the end raises
   ``ValueError("truncated bitstream")``.
+* **Huffman and LZ77**: ``canonical_codes`` (RFC 1951 §3.2.2 / T.81
+  Annex C code assignment), ``huffman_table`` (a flat lookup table plus
+  an escape map for longer codes) decoded by ``LsbBits.symbol`` (inflate)
+  and ``MsbBits.symbol`` (bzip2), and ``lz_copy``, the back-reference
+  copy of inflate, lz4, snappy, zstd and xz.
 * **CRC32C** (Castagnoli), slicing-by-8: Kafka record batches, TFRecord.
   Plain CRC-32 is ``zlib.crc32``.
 * **vectorized encoders**: ``zigzag_varint_encode`` (the batch form of
@@ -29,8 +34,11 @@ What stays outside, and why:
 
 * ``zstd_dec.BackBits``: the only backward bitstream (sentinel bit,
   reads consume downward).
+* ``zstd_dec._huff_from_weights``: zstd orders codes by weight, longest
+  codes first, and reads them backward through ``BackBits``.
 * ``jpeg._BitReader`` / ``_BitWriter``: they handle 0xFF00 byte stuffing
-  and are already shared by the three jpeg modules.
+  and are already shared by the three jpeg modules. jpeg decodes codes
+  bit by bit: a table peek could read past a code into a marker.
 * ``deflate_enc._BitWriter``: the only LSB-first writer.
 * ``gorilla._BitWriter``: the only MSB-first writer without stuffing.
 * ``bzip2._bz_crc``: the per-byte reference the tests pin
@@ -57,6 +65,9 @@ __all__ = [
     "read_fixed",
     "LsbBits",
     "MsbBits",
+    "canonical_codes",
+    "huffman_table",
+    "lz_copy",
     "crc32c",
     "zigzag_varint_encode",
     "rowcat",
@@ -153,6 +164,27 @@ class LsbBits:
         self.nbits -= n
         return v
 
+    def symbol(self, table) -> int:
+        """One symbol through an LSB-first ``huffman_table``."""
+        width, lut, esc = table
+        if self.nbits < width:
+            self.fill(width)
+        entry = lut[self.acc & ((1 << width) - 1)]
+        if entry is None:  # longer than the table, or no code at all
+            for n, codes in esc.items():
+                self.fill(n)
+                entry = codes.get(self.acc & ((1 << n) - 1))
+                if entry:
+                    break
+            else:
+                raise ValueError("bad Huffman code")
+        sym, n = entry
+        if n > self.nbits:
+            raise ValueError("truncated bitstream")
+        self.acc >>= n
+        self.nbits -= n
+        return sym
+
     def byte_pos(self) -> int:
         """Drop to a byte boundary; → offset of the next unconsumed byte."""
         drop = self.nbits & 7
@@ -189,6 +221,78 @@ class MsbBits:
             raise ValueError("truncated bitstream")
         self.p = p + n
         return int(self.s[p : p + n], 2)
+
+    def symbol(self, table) -> int:
+        """One symbol through an MSB-first ``huffman_table``; the zero
+        padding makes the peek past the last real bit safe."""
+        width, lut, esc = table
+        s, p = self.s, self.p
+        entry = lut[int(s[p : p + width], 2)]
+        if entry is None:  # longer than the table, or no code at all
+            for n, codes in esc.items():
+                entry = codes.get(int(s[p : p + n], 2))
+                if entry:
+                    break
+            else:
+                raise ValueError("bad Huffman code")
+        sym, n = entry
+        if p + n > self.nbits:
+            raise ValueError("truncated bitstream")
+        self.p = p + n
+        return sym
+
+
+# ---------------------------------------------------------------------------
+# canonical Huffman and the LZ77 back-reference copy
+# ---------------------------------------------------------------------------
+
+
+def canonical_codes(pairs) -> dict[int, tuple[int, int]]:
+    """(symbol, length) pairs or a {symbol: length} mapping → {symbol:
+    (code, nbits)}: codes of one length are consecutive and go to the
+    symbols in the order given; length 0 means unused."""
+    used = [(sym, n) for sym, n in dict(pairs).items() if n]
+    codes: dict[int, tuple[int, int]] = {}
+    code, prev = -1, 0
+    for sym, n in sorted(used, key=lambda sn: sn[1]):  # stable
+        code = (code + 1) << (n - prev)
+        if code >> n:
+            raise ValueError("over-subscribed Huffman code")
+        codes[sym] = (code, n)
+        prev = n
+    return codes
+
+
+def huffman_table(lengths, width: int, lsb_first: bool) -> tuple:
+    """Code lengths in symbol order → ``(width, lut, esc)`` for
+    ``LsbBits.symbol`` (``lsb_first``: DEFLATE, whose codes sit
+    bit-reversed in the stream) or ``MsbBits.symbol`` (bzip2).
+    ``lut[next width bits]`` is ``(symbol, nbits)``; ``esc`` maps each
+    longer length, shortest first, to ``{next n bits: (symbol, n)}``."""
+    lut: list = [None] * (1 << width)
+    esc: dict[int, dict] = {}
+    for sym, (code, n) in canonical_codes(enumerate(lengths)).items():
+        if lsb_first:
+            code = int(f"{code:0{n}b}"[::-1], 2)
+        if n > width:
+            esc.setdefault(n, {})[code] = (sym, n)
+        elif lsb_first:  # the code is the low n bits of the index
+            lut[code :: 1 << n] = [(sym, n)] * (1 << (width - n))
+        else:  # the code is the high n bits of the index
+            k = 1 << (width - n)
+            lut[code * k : code * k + k] = [(sym, n)] * k
+    return width, lut, esc
+
+
+def lz_copy(out: bytearray, dist: int, n: int) -> None:
+    """Append ``n`` bytes copied from ``dist`` back (``0 < dist <=
+    len(out)``, checked by the caller); an overlapping copy repeats the
+    last ``dist`` bytes."""
+    start = len(out) - dist
+    if dist >= n:
+        out += out[start : start + n]
+    else:
+        out += (out[start:] * (n // dist + 1))[:n]
 
 
 # ---------------------------------------------------------------------------

@@ -35,7 +35,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hatchery_spark.functions.npwire import read_fixed, read_uvarint, write_uvarint
+from hatchery_spark.functions.npwire import (
+    lz_copy,
+    read_fixed,
+    read_uvarint,
+    write_uvarint,
+)
 
 _HASH_BITS = 12
 _HASH_MUL = 0x1E35A7BD  # the multiplicative hash snappy documents
@@ -148,12 +153,7 @@ def snappy_decompress(buf: bytes) -> bytes:
             offset = int.from_bytes(raw, "little")
         if offset == 0 or offset > len(out):
             raise ValueError("snappy: bad copy offset")
-        start = len(out) - offset
-        if offset >= ln:
-            out += out[start : start + ln]
-        else:  # overlapping copy — the offset-byte pattern repeats
-            pattern = out[start:]
-            out += (pattern * (ln // offset + 1))[:ln]
+        lz_copy(out, offset, ln)
     if len(out) != want:
         raise ValueError(f"snappy: length mismatch {len(out)} != {want}")
     return bytes(out)

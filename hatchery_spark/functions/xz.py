@@ -22,7 +22,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from hatchery_spark.functions.npwire import read_uvarint
+from hatchery_spark.functions.npwire import lz_copy, read_uvarint
 
 __all__ = ["unxz", "xz_decode_col"]
 
@@ -201,11 +201,11 @@ class _Lzma:
                 continue
             if rc.bit(self.is_rep, self.state):
                 # rep match
+                length = 0
                 if not rc.bit(self.is_rep_g0, self.state):
                     if not rc.bit(self.is_rep0_long[self.state], pos_state):
                         self.state = 9 if self.state < 7 else 11
-                        out.append(out[-self.rep0 - 1])
-                        continue
+                        length = 1  # short rep: one byte at rep0
                 else:
                     if not rc.bit(self.is_rep_g1, self.state):
                         dist = self.rep1
@@ -218,8 +218,9 @@ class _Lzma:
                         self.rep2 = self.rep1
                     self.rep1 = self.rep0
                     self.rep0 = dist
-                length = self.rep_len_dec.decode(rc, pos_state)
-                self.state = 8 if self.state < 7 else 11
+                if not length:
+                    length = self.rep_len_dec.decode(rc, pos_state)
+                    self.state = 8 if self.state < 7 else 11
             else:
                 # new match
                 self.rep3, self.rep2, self.rep1 = self.rep2, self.rep1, self.rep0
@@ -242,8 +243,7 @@ class _Lzma:
                 self.rep0 = dist
             if self.rep0 >= len(out) - window_start:
                 raise ValueError("lzma: distance past dictionary start")
-            for _ in range(length):
-                out.append(out[-self.rep0 - 1])
+            lz_copy(out, self.rep0 + 1, length)
         if len(out) != limit:
             raise ValueError("lzma: chunk overran its unpacked size")
 

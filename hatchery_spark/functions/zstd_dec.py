@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import struct
 
-from hatchery_spark.functions.npwire import LsbBits, read_fixed
+from hatchery_spark.functions.npwire import LsbBits, lz_copy, read_fixed
 
 ZSTD_MAGIC = 0xFD2FB528
 
@@ -541,12 +541,7 @@ def _execute_sequences(
         lit_pos += ll
         if offset > len(out):
             raise ValueError("zstd: match offset beyond window")
-        start = len(out) - offset
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:
-            for k in range(ml):
-                out.append(out[start + k])
+        lz_copy(out, offset, ml)
         if i < nseq - 1:  # states update LL, ML, OF — not after the last
             ll_s.update(bits)
             ml_s.update(bits)

@@ -8,11 +8,11 @@ import zlib
 import pytest
 
 from hatchery_spark.functions.deflate_enc import (
-    _canonical_codes,
     _limited_lengths,
     deflate_encode,
 )
 from hatchery_spark.functions.inflate import inflate
+from hatchery_spark.functions.npwire import canonical_codes as _canonical_codes
 
 CASES = [
     b"",

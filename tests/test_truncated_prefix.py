@@ -17,6 +17,7 @@ import pytest
 from hatchery_spark.functions.bzip2 import bunzip2
 from hatchery_spark.functions.gorilla import decode_series, encode_series
 from hatchery_spark.functions.inflate import inflate
+from hatchery_spark.functions.lz4 import lz4_frame_compress, lz4_frame_decompress
 from hatchery_spark.functions.snappy import snappy_compress, snappy_decompress
 from hatchery_spark.functions.xz import unxz
 from hatchery_spark.functions.zstd_dec import zstd_decompress
@@ -43,6 +44,7 @@ def _gorilla() -> bytes:
 
 CASES = {
     "inflate": (inflate, lambda: _raw_deflate(TEXT)),
+    "lz4": (lz4_frame_decompress, lambda: lz4_frame_compress(TEXT)),
     "bunzip2": (bunzip2, lambda: bz2.compress(TEXT, 9)),
     "unxz": (unxz, lambda: lzma.compress(TEXT, format=lzma.FORMAT_XZ)),
     "zstd": (zstd_decompress, lambda: bytes(pa.Codec("zstd").compress(TEXT))),
